@@ -39,16 +39,7 @@ object SparkEntry {
     val keys = categories.flatMap(_.keys)
     val dups = keys.groupBy(identity).collect { case (k, vs) if vs.size > 1 => k }
     require(dups.isEmpty, s"duplicate query keys across category maps: $dups")
-    // r16: register the graft native functions (hash60, plane_sig, ...)
-    // on the caller's session before ANY query constructs — Qutil.hash60
-    // is a session-scoped temp function now and reaches nearly every
-    // category through the shared salted-hash/sig helpers. Idempotent
-    // map-puts, driver-side, once per query construction.
-    categories.reduce(_ ++ _).map { case (k, f) =>
-      k -> ((s: SparkSession, d: String) => {
-        graft.functions.GraftFunctions.registerAll(s); f(s, d)
-      })
-    }
+    categories.reduce(_ ++ _)
   }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

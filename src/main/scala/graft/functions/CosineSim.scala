@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -13,8 +11,8 @@ import org.apache.spark.sql.types._
   * parity needs the exact same fold as DuckDB); this expression is the
   * faster single-pass form for production use — one fused loop, codegen'd
   * into whole-stage Java (SURVEY brief preference order: native Expression
-  * with doGenCode > HOF composition > UDF). Registered as `cosine_sim` via
-  * GraftExtensions (SparkSessionExtensions) or registerAll(). */
+  * with doGenCode > HOF composition > UDF). Typed builder:
+  * GraftFunctions.cosineSim. */
 case class CosineSim(left: Expression, right: Expression)
   extends BinaryExpression with ExpectsInputTypes {
 
@@ -69,59 +67,4 @@ case class CosineSim(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSim =
     copy(left = newLeft, right = newRight)
-}
-
-object GraftFunctions {
-  /** Imperative registration for an existing session. */
-  def registerAll(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_prod", exprs => DotProd(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sq_dist", exprs => SqDist(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "phash_bits", exprs => PhashBits(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "tri_moments", exprs => TriMoments(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitand_count", exprs => BitAndCount(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash60", exprs => Simhash60(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "affine_min", exprs => AffineMin(exprs(0), exprs(1), exprs(2), exprs(3)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hash60", exprs => Hash60(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "plane_sig", exprs => PlaneSig(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "quant8_stats", exprs => Quant8Stats(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "quantpd_stats", exprs => QuantPerDimStats(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "l1_dist", exprs => L1Dist(exprs(0), exprs(1)), "built-in")
-  }
-}
-
-/** SparkSessionExtensions hook:
-  * .config("spark.sql.extensions", "graft.functions.GraftExtensions") */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, null, "cosine_sim",
-        "_FUNC_(a, b) - cosine similarity of two float vectors.", ""),
-      (exprs: Seq[Expression]) => CosineSim(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("dot_prod"),
-      new ExpressionInfo(classOf[DotProd].getName, null, "dot_prod",
-        "_FUNC_(a, b) - dot product of two float/double vectors.", ""),
-      (exprs: Seq[Expression]) => DotProd(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("sq_dist"),
-      new ExpressionInfo(classOf[SqDist].getName, null, "sq_dist",
-        "_FUNC_(a, b) - squared L2 distance of two float/double vectors.", ""),
-      (exprs: Seq[Expression]) => SqDist(exprs(0), exprs(1))))
-    ext.injectOptimizerRule(_ => graft.plans.CollapseNestedUpper)
-  }
 }

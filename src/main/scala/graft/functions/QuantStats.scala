@@ -83,13 +83,14 @@ object Quant8Stats {
       if (v.isNullAt(i)) return null // null element => null struct (doc'd)
       i += 1
     }
-    // pass 1: maxabs, index-ascending like array_max(transform(abs))
+    // pass 1: maxabs, index-ascending like array_max(transform(abs)),
+    // which orders NaN greatest (Double.compare; abs leaves no -0.0)
     var maxabs = Double.NegativeInfinity
     var any = false
     i = 0
     while (i < n) {
       val a = math.abs(v.getFloat(i).toDouble)
-      if (!any || a > maxabs) { maxabs = a; any = true }
+      if (!any || java.lang.Double.compare(a, maxabs) > 0) { maxabs = a; any = true }
       i += 1
     }
     // greatest(maxabs, 1e-12) skips the NULL array_max of an empty array

@@ -343,10 +343,12 @@ object Scale {
     * candidates) into dedup GROUPS, so a pipeline can keep one survivor
     * per component instead of dropping both ends of every pair.
     *
-    * `nodes`: one column `id`; `edges`: columns `src`,`dst` (undirected,
-    * given once — mirrored internally). Returns (`id`, `cluster`) where
-    * `cluster` is the component's minimum id — deterministic, so it
-    * oracle-checks against a transitive-closure recursive CTE.
+    * `nodes`: one column `id`, ids unique (the keyed round aggregate
+    * collapses a duplicate id into one output row); `edges`: columns
+    * `src`,`dst` (undirected, given once — mirrored internally). Returns
+    * (`id`, `cluster`) where `cluster` is the component's minimum id —
+    * deterministic, so it oracle-checks against a transitive-closure
+    * recursive CTE.
     *
     * Each round every node takes the min label over itself and its
     * neighbors: converges in O(graph diameter) rounds. LSH cluster graphs

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import Qutil._
+import graft.functions.GraftFunctions.{cosineSim, dotProd, sqDist, triMoments}
 
 /** SURVEY §2.11 extensions — embedding-space CLUSTERING and QC for
   * training-data curation: distributed Lloyd's k-means (the topic-
@@ -42,8 +43,7 @@ object KmeansQueries {
     // r15: the native fused SqDist loop (graft.functions) — BIT-identical
     // to the old zip_with/aggregate left fold (ExpressionSpec pins it),
     // but whole-stage-codegen'd instead of interpreted CodegenFallback.
-    // Callers with a DataFrame in hand must registerAll first.
-    call_function("sq_dist", a, b)
+    sqDist(a, b)
 
   /** DuckDB mirror of sqDistD ($a indexes a float list, $c a double list). */
   private def sqDistSql(a: String, c: String): String = sqDistSqlN(dims, a, c)
@@ -56,7 +56,6 @@ object KmeansQueries {
     * nearest centroid (first minimum -> smallest cluster id on ties, the
     * same tie-break as the oracle's ORDER BY d2, cluster). */
   private def assign(e: DataFrame, cents: Seq[(Int, Seq[Double])]): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(e.sparkSession)
     val cl = typedlit(cents.map(_._2))
     val cid = typedlit(cents.map(_._1))
     val d2s = transform(cl, c => sqDistD(col("embedding"), c))
@@ -143,7 +142,6 @@ object KmeansQueries {
     // cluster. Assignment reuses the shared finalCentroids/assign —
     // bit-identical cross-engine, so the pair SET is fully oracled.
     "dedup_embed_kmeans" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       val cents = finalCentroids(s, d)
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"), normD(col("embedding")).as("nrm"))
@@ -170,7 +168,7 @@ object KmeansQueries {
       a.hint("merge").join(b,
           col("cluster") === col("b_cluster") && col("sa") === col("sb") &&
             col("a_id") < col("b_id"))
-        .withColumn("cos", call_function("cosine_sim", col("a_emb"), col("b_emb")))
+        .withColumn("cos", cosineSim(col("a_emb"), col("b_emb")))
         .where(col("cos") >= 0.35)
         .select(col("cluster"), col("a_id").as("vec_a"), col("b_id").as("vec_b"),
           r6(col("cos")).as("cosine"))
@@ -182,7 +180,6 @@ object KmeansQueries {
     // the WindowGroupLimit top-k shape — no driver work at all here; the
     // 10-row centroid side broadcasts).
     "embed_outlier_dist" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       val e = Tables.embeddings(s, d)
       val cent = e
         .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
@@ -290,7 +287,6 @@ object KmeansQueries {
     // identical) ADC value, display r6 after selection (the
     // sim_search_topk convention).
     "sim_search_pq" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       val cents = pqCodebooks(s, d)
       val e = Tables.embeddings(s, d)
       val qv = e.where(col("vec_id") === 0).select("embedding").head()
@@ -360,7 +356,6 @@ object KmeansQueries {
     // preserved and KmeansSpec pins the top-10 inside the exact
     // RAW-space top quartile.
     "sim_search_opq" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       val rot = learnedRot(s, d)
       val sv = rotSubvecs(rot)
       val cents = pqCodebooksFrom(sv)
@@ -405,7 +400,6 @@ object KmeansQueries {
     // left-fold distance), two TakeOrderedAndProject stages, query
     // enters as a broadcast scalar row — no driver literals needed.
     "sim_search_mrl" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val q = e.where(col("vec_id") === 0).select(col("embedding").as("qv"))
       e.where(col("vec_id") =!= 0)
@@ -432,7 +426,6 @@ object KmeansQueries {
     // (the sim_search_mrl two-stage shape: two TakeOrderedAndProject
     // stages, broadcast scalar query row).
     "sim_search_hamming" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       val masks32 = array((0 until 32).map(j => lit(1L << j)): _*)
       def sigHalf(off: Int): Column =
         aggregate(
@@ -468,7 +461,6 @@ object KmeansQueries {
     // scan. Cell routing + in-row codes are all map work against
     // broadcast literals; top-10 via TakeOrderedAndProject.
     "sim_search_ivfpq" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val coarse = e.where(col("vec_id") < ivfCells).orderBy("vec_id").collect()
         .map(r => (r.getLong(0).toInt, r.getSeq[Float](1).map(_.toDouble).toSeq))
@@ -496,7 +488,6 @@ object KmeansQueries {
     // Fully exact: every ranking ties (d, vec_id) and only the hit
     // COUNT carries to the emission (the sim_recall_eval argument).
     "sim_mrl_sweep" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val q = e.where(col("vec_id") === 0).select(col("embedding").as("qv"))
       val dists = e.where(col("vec_id") =!= 0).crossJoin(broadcast(q))
@@ -537,7 +528,6 @@ object KmeansQueries {
     // NOT isnan guard (the cosinePairs rule). ONE corpus scan: totals
     // derive from the bounded bucket frame, never a second pass.
     "embed_isotropy" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       val e = Tables.embeddings(s, d)
       val cent = e
         .select(posexplode(col("embedding")).as(Seq("p0", "x")))
@@ -549,9 +539,9 @@ object KmeansQueries {
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("v")))),
           p => p.getField("v")).as("cent"))
       val scored = e.crossJoin(broadcast(cent))
-        .select((call_function("dot_prod", col("embedding"), col("cent")) /
-          (sqrt(call_function("dot_prod", col("embedding"), col("embedding"))) *
-            sqrt(call_function("dot_prod", col("cent"), col("cent"))))).as("cos"),
+        .select((dotProd(col("embedding"), col("cent")) /
+          (sqrt(dotProd(col("embedding"), col("embedding"))) *
+            sqrt(dotProd(col("cent"), col("cent"))))).as("cos"),
           normD(col("embedding")).as("nrm"))
         .where(!isnan(col("cos")))
         .select(floor(col("cos") * 1000000.0 + 0.5).as("qc"),
@@ -683,11 +673,10 @@ object KmeansQueries {
     // — identical (i, j, p) integer tuples, ExpressionSpec-pinned) instead
     // of nested interpreted transforms; the explode + keyed decimal sums
     // downstream are unchanged.
-    graft.functions.GraftFunctions.registerAll(e.sparkSession)
     val qs = transform(col("embedding"),
       x => floor(x.cast(DoubleType) * 1000000.0 + 0.5).cast("long"))
     e.select(qs.as("qs"))
-      .select(explode(call_function("tri_moments", col("qs"))).as("t"))
+      .select(explode(triMoments(col("qs"))).as("t"))
       .groupBy(col("t.i").as("dim_i"), col("t.j").as("dim_j"))
       .agg(sum(col("t.p").cast(DecimalType(38, 0))).as("sij"),
         count(lit(1)).as("n"))
@@ -824,7 +813,6 @@ object KmeansQueries {
     * oracle's ORDER BY d2, cluster. */
   private def pqAssign(sv: DataFrame,
       cents: Seq[Seq[(Int, Seq[Double])]]): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(sv.sparkSession)
     val cl = typedlit(cents.map(_.map(_._2)))
     val cid = typedlit(cents.map(_.map(_._1)))
     val d2s = transform(element_at(cl, col("sub") + 1),
@@ -926,7 +914,6 @@ object KmeansQueries {
     * (double - double), identical on both engines. */
   private def rqAssignResidual(df: DataFrame, cents: Seq[(Int, Seq[Double])],
       codeName: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(df.sparkSession)
     val cl = typedlit(cents.map(_._2))
     val cid = typedlit(cents.map(_._1))
     val d2s = transform(cl, c => sqDistD(col("sv"), c))

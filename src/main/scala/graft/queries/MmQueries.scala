@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions.{l1Dist, phashBits}
 
 /** SURVEY §2.11 multimodal columns — the DECLARED-query edition (r7).
   *
@@ -79,7 +80,6 @@ object MmQueries {
       val c = if (u == 0) math.sqrt(1.0 / 8) else math.sqrt(2.0 / 8)
       math.floor(c * math.cos(math.Pi * (2 * x + 1) * u / 16.0) * 1e6 + 0.5).toLong
     }
-  private def dctSpark: String = dctT.map(v => s"${v}L").mkString("array(", ", ", ")")
   private def dctDuck: String = dctT.mkString("([", ", ", "]::BIGINT[])")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -260,7 +260,6 @@ object MmQueries {
     // laned (re-checked pair generator — the catalog's hot-bucket
     // standard).
     "mm_near_dup_phash" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       // r15: the four-stage interpreted DCT chain (row pass, column pass,
       // AC sum, threshold bits — each localCheckpoint'd purely to stop
       // CollapseProject re-inlining the previous array into every
@@ -280,7 +279,7 @@ object MmQueries {
           "transform(sequence(0, 63), k -> CASE WHEN k = p " +
             "THEN CAST(conv(substring(hx0, k*2 + 1, 2), 16, 10) AS INT) ^ 1 " +
             "ELSE CAST(conv(substring(hx0, k*2 + 1, 2), 16, 10) AS INT) END) AS bt")
-        .selectExpr("doc_id", s"phash_bits(bt, $dctSpark) AS bits")
+        .select(col("doc_id"), phashBits(col("bt"), array(dctT.map(lit): _*)).as("bits"))
         .transform(graft.operators.Scale.materialize)
       val w16 = (0 until 16).map(i => 1 << i).mkString("array(", ", ", ")")
       val bands = fp.selectExpr("doc_id",
@@ -300,8 +299,8 @@ object MmQueries {
         // (exact integer equality with the zip_with/aggregate spelling —
         // ExpressionSpec pins it), whole-stage codegen on the pair hot
         // loop like r15's bitand_count
-        .selectExpr("doc_a", "doc_b",
-          "CAST(l1_dist(ba, bb) AS BIGINT) AS hamming")
+        .select(col("doc_a"), col("doc_b"),
+          l1Dist(col("ba"), col("bb")).cast("bigint").as("hamming"))
         .where(col("hamming") <= 8)
         .orderBy("doc_a", "doc_b")
     })

@@ -61,13 +61,11 @@ object Qutil {
     * Long.MaxValue/1e6 ≈ 9.22e12 at Long.MaxValue, while DuckDB's floor
     * keeps doubles — the old ROUND passed all of these through
     * identically, so without the guard every converted site had a
-    * latent divergence on degenerate ratios (r7 review findings;
-    * tools/round_sweep2.py upgraded all 153 SQL sites). Above 9e12 the
-    * double grid is coarser than 1e-3 anyway — 6-decimal display
+    * latent divergence on degenerate ratios (r7 review findings). Above
+    * 9e12 the double grid is coarser than 1e-3 anyway — 6-decimal display
     * rounding is meaningless there, and both engines emit the identical
     * raw value. NULL still propagates through the rounding arm. Oracle
-    * mirrors use r6Sql/r3Sql below — the r7 sweeps
-    * (tools/round_sweep.py + round_sweep2.py) converted every site. */
+    * mirrors use r6Sql/r3Sql below. */
   def rScale(c: Column, pow10: Double): Column = {
     val x = c.cast(DoubleType)
     when(isnan(x) || abs(x) >= lit(9e12), x)
@@ -112,12 +110,8 @@ object Qutil {
     // SHA-256 digest read directly as the top-60-bit long, replacing the
     // conv(substring(sha2(...))) string churn. Identical bits on every
     // input by construction (ExpressionSpec pins it against this old
-    // spelling); the DuckDB mirror below is untouched. Registration:
-    // SparkEntry wraps every declared query with registerAll, SparkSpec's
-    // shared session registers for the suites, and helper defs register
-    // on their frame's session — a missing registration fails loudly at
-    // analysis ("hash60 not found"), never silently.
-    call_function("hash60", c)
+    // spelling); the DuckDB mirror below is untouched.
+    graft.functions.GraftFunctions.hash60(c)
 
   /** The r15-and-earlier composed spelling, kept callable for the
     * equality pin (ExpressionSpec) — never used in a query plan. */

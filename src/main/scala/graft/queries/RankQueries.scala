@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import Qutil._
+import graft.functions.GraftFunctions.cosineSim
 
 /** SURVEY §2.12 extension — lexical retrieval scoring (BM25) and hybrid
   * lexical+vector rank fusion (RRF), the two ranking primitives a
@@ -130,14 +131,13 @@ object RankQueries {
     // exactly 0 — the standard RRF contract. Output is BIGINT-exact
     // (scaled weights), no rounding rule needed at all.
     "sim_hybrid_rrf" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       val lex = rankTopK(bm25Fit(Tables.documents(s, d)), "score", "doc_id")
         .withColumnRenamed("rnk", "r_lex")
       val q = Tables.embeddings(s, d).where(col("vec_id") === 0)
         .select(col("embedding").as("qv"))
       val cosr = Tables.embeddings(s, d).where(col("vec_id") =!= 0)
         .crossJoin(broadcast(q))
-        .select(col("vec_id"), call_function("cosine_sim", col("embedding"), col("qv")).as("cos"))
+        .select(col("vec_id"), cosineSim(col("embedding"), col("qv")).as("cos"))
       val vec = rankTopK(cosr, "cos", "vec_id").withColumnRenamed("rnk", "r_vec")
       // weight lookup happens BEFORE the outer join, where the rank is
       // never null (element_at with a null index misbehaves under the

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import Qutil._
+import graft.functions.GraftFunctions.{cosineSim, dotProd, planeSig, quant8Stats, quantpdStats}
 
 /** SURVEY §2.11 — similarity search over the 64-dim float embeddings.
   *
@@ -31,13 +32,12 @@ object SimQueries {
     * connected-components clustering. */
   private[graft] def cosinePairs(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"), col("embedding"),
         normD(col("embedding")).as("nrm"))
     labelPairs(e)
       .withColumn("cos",
-        call_function("cosine_sim", col("a_emb"), col("b_emb")))
+        cosineSim(col("a_emb"), col("b_emb")))
       .where(col("cos") >= 0.35)
   }
 
@@ -122,7 +122,7 @@ object SimQueries {
     // The plane matrix stays ONE typedlit literal (the r12 lesson);
     // PlaneSig embeds its evaluated value as a codegen reference object.
     val planes = typedlit(planeInts.map(_.map(_ / 1000.0)))
-    call_function("plane_sig", v, planes)
+    planeSig(v, planes)
   }
 
   /** Banded bucket frame (vec_id, <key>, band, bits) off the packed
@@ -135,7 +135,6 @@ object SimQueries {
     * the boundary and the 64-dot pass runs once per row. */
   private def sigBuckets(e: org.apache.spark.sql.DataFrame,
       key: String): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.registerAll(e.sparkSession)
     val bandCols = (0 until embedBands).map(b =>
       struct(lit(b).as("band"),
         shiftright(col("sig"), b * embedRows)
@@ -159,7 +158,6 @@ object SimQueries {
     * mirrors the banding exactly, so correctness is deterministic). */
   private[graft] def embedBandPairs(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"), col("embedding"),
         normD(col("embedding")).as("nrm"))
@@ -189,7 +187,7 @@ object SimQueries {
       .join(e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"),
         col("nrm").as("b_nrm")), "b_id")
       .withColumn("cos",
-        call_function("cosine_sim", col("a_emb"), col("b_emb")))
+        cosineSim(col("a_emb"), col("b_emb")))
       .where(col("cos") >= 0.35)
   }
 
@@ -212,7 +210,6 @@ object SimQueries {
     // then two id-keyed join-backs; banding recall bounds are pinned
     // in SimSpec against a brute-force reference.
     "dq_embed_contamination" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"),
           normD(col("embedding")).as("nrm"),
@@ -236,7 +233,7 @@ object SimQueries {
         .join(e.select(col("vec_id").as("tr_id"), col("embedding").as("tr_emb"),
           col("nrm").as("tr_nrm")), "tr_id")
         .withColumn("cos",
-          call_function("cosine_sim", col("t_emb"), col("tr_emb")))
+          cosineSim(col("t_emb"), col("tr_emb")))
         .where(col("cos") >= 0.35)
         .groupBy("t_id")
         .agg(count(lit(1)).as("n_train_matches"),
@@ -253,14 +250,12 @@ object SimQueries {
     // are bit-identical (same per-accumulator fold order; ExpressionSpec
     // pins it with doubleToLongBits), so the DuckDB oracle and goldens are
     // untouched while the hot loop leaves the CodegenFallback HOF path.
-    // registerAll is idempotent and session-local.
     "sim_search_topk" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       val q = Tables.embeddings(s, d).where(col("vec_id") === 0)
         .select(col("embedding").as("qv"))
       Tables.embeddings(s, d).where(col("vec_id") =!= 0)
         .crossJoin(broadcast(q))
-        .withColumn("cos", call_function("cosine_sim", col("embedding"), col("qv")))
+        .withColumn("cos", cosineSim(col("embedding"), col("qv")))
         .orderBy(col("cos").desc, col("vec_id"))
         .limit(10)
         .select(col("vec_id"), r6(col("cos")).as("cosine"))
@@ -282,13 +277,12 @@ object SimQueries {
     // bitmask over candidate ranks as the selected-set state). Ties at
     // equal score go to the smaller vec_id on both engines.
     "sim_search_mmr" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       import s.implicits._
       val q = Tables.embeddings(s, d).where(col("vec_id") === 0)
         .select(col("embedding").as("qv"))
       val cand = Tables.embeddings(s, d).where(col("vec_id") =!= 0)
         .crossJoin(broadcast(q))
-        .withColumn("cos", call_function("cosine_sim", col("embedding"), col("qv")))
+        .withColumn("cos", cosineSim(col("embedding"), col("qv")))
         .orderBy(col("cos").desc, col("vec_id"))
         .limit(12)
         .select(col("vec_id"), col("cos"), col("embedding"))
@@ -330,13 +324,12 @@ object SimQueries {
     // Same native-CosineSim scan + TakeOrderedAndProject as
     // sim_search_topk; selection on the raw cosine, display r6.
     "sim_search_filtered" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       val q = Tables.embeddings(s, d).where(col("vec_id") === 0)
         .select(col("embedding").as("qv"))
       Tables.embeddings(s, d)
         .where(col("vec_id") =!= 0 && col("label").isin(1, 2, 3))
         .crossJoin(broadcast(q))
-        .withColumn("cos", call_function("cosine_sim", col("embedding"), col("qv")))
+        .withColumn("cos", cosineSim(col("embedding"), col("qv")))
         .orderBy(col("cos").desc, col("vec_id"))
         .limit(10)
         .select(col("vec_id"), col("label"), r6(col("cos")).as("cosine"))
@@ -349,11 +342,10 @@ object SimQueries {
     // key never funnels all pairs through 10 window reducers. Tie-break
     // (cos desc, vec_a, vec_b) is encoded as min((-cos, vec_a, vec_b)).
     "sim_join_label" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("label"),
         col("embedding"), normD(col("embedding")).as("nrm"))
       labelPairs(e)
-        .withColumn("cos", call_function("cosine_sim", col("a_emb"), col("b_emb")))
+        .withColumn("cos", cosineSim(col("a_emb"), col("b_emb")))
         // a zero-norm embedding yields cos = NaN; NaN sorts LARGEST in
         // Spark but the min(-cos) encoding would invert that relative to
         // the oracle's ORDER BY cos DESC — drop NaN pairs explicitly so
@@ -480,11 +472,10 @@ object SimQueries {
     // whole pipeline is IEEE-portable, so unlike round 1 the result is
     // oracle-checked (lshOracleSql) on top of SimSpec's recall bound.
     "sim_search_lsh" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       def sig(v: org.apache.spark.sql.Column) =
         (0 until 16).map { k =>
           val plane = array(planeInts(k).map(i => lit(i / 1000.0)): _*)
-          when(call_function("dot_prod", v, plane) > 0.0, lit(1 << k)).otherwise(0)
+          when(dotProd(v, plane) > 0.0, lit(1 << k)).otherwise(0)
         }.reduce(_ + _)
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"), sig(col("embedding")).as("sg"))
@@ -493,7 +484,7 @@ object SimQueries {
       e.where(col("vec_id") =!= 0)
         .crossJoin(broadcast(q))
         .where(bit_count(col("sg").bitwiseXOR(col("qsg"))) <= 5)
-        .withColumn("cos", call_function("cosine_sim", col("embedding"), col("qv")))
+        .withColumn("cos", cosineSim(col("embedding"), col("qv")))
         .orderBy(col("cos").desc, col("vec_id"))
         .limit(10)
         .select(col("vec_id"), r6(col("cos")).as("cosine"))
@@ -509,7 +500,6 @@ object SimQueries {
     // just scale the join — and only candidates pay the exact cosine.
     // Top-3 per query via the WindowGroupLimit row_number shape.
     "sim_search_lsh_batch" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"), packedSig(col("embedding")).as("sg"))
       val bands = e.select(col("vec_id"), explode(array((0 until embedBands).map(b =>
@@ -527,7 +517,7 @@ object SimQueries {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
       cand.join(qe, "qid").join(ce, "vec_id")
-        .withColumn("cos", call_function("cosine_sim", col("embedding"), col("qv")))
+        .withColumn("cos", cosineSim(col("embedding"), col("qv")))
         .where(!isnan(col("cos")))
         .withColumn("rn", row_number().over(w)).where(col("rn") <= 3)
         .select(col("qid"), col("rn").cast(IntegerType).as("rank"),
@@ -547,14 +537,13 @@ object SimQueries {
     // linear, the eval-set shape), the ANN side touches nprobe cells;
     // both rank under a per-probe window, never a global one.
     "sim_recall_eval" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"), normD(col("embedding")).as("nrm"))
       val cents = e.where(col("vec_id") < 16)
         .select(col("vec_id").as("cid"), col("embedding").as("cemb"), col("nrm").as("cnrm"))
       val wAssign = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cid"))
       val assign = e.crossJoin(broadcast(cents))
-        .withColumn("ccos", call_function("cosine_sim", col("embedding"), col("cemb")))
+        .withColumn("ccos", cosineSim(col("embedding"), col("cemb")))
         .where(!isnan(col("ccos")))
         .withColumn("crn", row_number().over(wAssign))
       val cells = assign.where(col("crn") === 1)
@@ -566,7 +555,7 @@ object SimQueries {
       val wQ = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
       def top10(cand: org.apache.spark.sql.DataFrame) = cand
         .join(broadcast(probes), "qid")
-        .withColumn("cos", call_function("cosine_sim", col("embedding"), col("qv")))
+        .withColumn("cos", cosineSim(col("embedding"), col("qv")))
         .where(!isnan(col("cos")))
         .withColumn("rn", row_number().over(wQ))
         .where(col("rn") <= 10)
@@ -598,7 +587,6 @@ object SimQueries {
     // (np-independent). Recall is monotone in np by construction
     // (probed cells are nested) — SimSpec pins it.
     "sim_probe_sweep" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       import s.implicits._
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"), normD(col("embedding")).as("nrm"))
@@ -610,7 +598,7 @@ object SimQueries {
       // join + window twice) — checkpoint the narrow (vec_id, cid, crn)
       // projection once and derive both consumers from it.
       val assign = e.crossJoin(broadcast(cents))
-        .withColumn("ccos", call_function("cosine_sim", col("embedding"), col("cemb")))
+        .withColumn("ccos", cosineSim(col("embedding"), col("cemb")))
         .where(!isnan(col("ccos")))
         .withColumn("crn", row_number().over(wAssign))
         .select(col("vec_id"), col("cid"), col("crn"))
@@ -629,7 +617,7 @@ object SimQueries {
         .where(col("vec_id") =!= col("qid"))
         .join(e, "vec_id")
         .join(broadcast(probes), "qid")
-        .withColumn("cos", call_function("cosine_sim", col("embedding"), col("qv")))
+        .withColumn("cos", cosineSim(col("embedding"), col("qv")))
         .where(!isnan(col("cos")))
         .withColumn("rn", row_number().over(wNp))
         .where(col("rn") <= 10)
@@ -637,7 +625,7 @@ object SimQueries {
       val wQ = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
       val exactTop = e.crossJoin(broadcast(probes))
         .where(col("vec_id") =!= col("qid"))
-        .withColumn("cos", call_function("cosine_sim", col("embedding"), col("qv")))
+        .withColumn("cos", cosineSim(col("embedding"), col("qv")))
         .where(!isnan(col("cos")))
         .withColumn("rn", row_number().over(wQ))
         .where(col("rn") <= 10)
@@ -665,14 +653,13 @@ object SimQueries {
     // cell is a hot shard, and this table is what triggers re-training
     // or cell splitting. Totals enter via one broadcast scalar row.
     "embed_ivf_stats" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"), normD(col("embedding")).as("nrm"))
       val cents = e.where(col("vec_id") < 16)
         .select(col("vec_id").as("cid"), col("embedding").as("cemb"), col("nrm").as("cnrm"))
       val wAssign = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cid"))
       val cellsN = e.crossJoin(broadcast(cents))
-        .withColumn("ccos", call_function("cosine_sim", col("embedding"), col("cemb")))
+        .withColumn("ccos", cosineSim(col("embedding"), col("cemb")))
         .where(!isnan(col("ccos")))
         .withColumn("crn", row_number().over(wAssign))
         .where(col("crn") === 1)
@@ -691,14 +678,13 @@ object SimQueries {
     }),
 
     "sim_search_ivf" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"), normD(col("embedding")).as("nrm"))
       val cents = e.where(col("vec_id") < 16)
         .select(col("vec_id").as("cid"), col("embedding").as("cemb"), col("nrm").as("cnrm"))
       val wAssign = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cid"))
       val assign = e.crossJoin(broadcast(cents))
-        .withColumn("ccos", call_function("cosine_sim", col("embedding"), col("cemb")))
+        .withColumn("ccos", cosineSim(col("embedding"), col("cemb")))
         .withColumn("crn", row_number().over(wAssign))
       val cells = assign.where(col("crn") === 1)
         .select(col("vec_id"), col("cid").as("cell"), col("embedding"), col("nrm"))
@@ -709,7 +695,7 @@ object SimQueries {
       cells.join(broadcast(qcells), "cell")
         .where(col("vec_id") =!= 0)
         .crossJoin(broadcast(q))
-        .withColumn("cos", call_function("cosine_sim", col("embedding"), col("qv")))
+        .withColumn("cos", cosineSim(col("embedding"), col("qv")))
         .orderBy(col("cos").desc, col("vec_id"))
         .limit(10)
         .select(col("vec_id"), r6(col("cos")).as("cosine"))
@@ -719,7 +705,6 @@ object SimQueries {
     // 5-NN majority-label classification for the first 20 vectors
     // (leave-one-out; ties broken toward the smaller label).
     "sim_knn_classify" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       val e = Tables.embeddings(s, d)
       // norms precomputed once per vector — the pairwise stage then does
       // one dot product per pair instead of three
@@ -731,7 +716,7 @@ object SimQueries {
       e.select(col("vec_id").as("cid"), col("label"), col("embedding"),
           normD(col("embedding")).as("nrm"))
         .join(broadcast(q), col("cid") =!= col("qid"))
-        .withColumn("cos", call_function("cosine_sim", col("embedding"), col("qv")))
+        .withColumn("cos", cosineSim(col("embedding"), col("qv")))
         .withColumn("rn", row_number().over(wNn))
         .where(col("rn") <= 5)
         .groupBy("qid", "true_label", "label")
@@ -765,10 +750,9 @@ object SimQueries {
       // extractions reference an attribute and the kernel runs once per
       // row (the r9c Generate rule; a plain select would re-inline the
       // extract-only alias per field — the r12/r15 CollapseProject trap).
-      graft.functions.GraftFunctions.registerAll(s)
       Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"),
-          explode(array(call_function("quant8_stats", col("embedding")))).as("qs"))
+          explode(array(quant8Stats(col("embedding")))).as("qs"))
         .select(col("vec_id"), col("label"),
           r6(col("qs.scale_raw")).as("scale"),
           col("qs.code_sum").as("code_sum"),
@@ -793,7 +777,6 @@ object SimQueries {
     // IEEE recipe (floor(x + 0.5) half-up, GREATEST span guard, left-
     // fold mse / 64 at r6) mirrored 1:1 in the oracle.
     "embed_quantize_perdim" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       val e = Tables.embeddings(s, d)
       val stats = e
         .select(posexplode(col("embedding")).as(Seq("pos", "x")))
@@ -816,7 +799,7 @@ object SimQueries {
       // unchanged.
       e.crossJoin(broadcast(stats))
         .select(col("vec_id"), col("label"),
-          explode(array(call_function("quantpd_stats",
+          explode(array(quantpdStats(
             col("embedding"), col("mns"), col("scales")))).as("qs"))
         .select(col("vec_id"), col("label"),
           col("qs.code_sum").as("code_sum"),
@@ -837,7 +820,6 @@ object SimQueries {
     // the ranking needs no tolerance; NaN (zero-norm) drops via the
     // cosinePairs isnan rule.
     "sim_hard_negatives" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       val e = Tables.embeddings(s, d)
       val q = e.where(col("vec_id") < 8)
         .select(col("vec_id").as("qid"), col("label").as("q_label"),
@@ -846,7 +828,7 @@ object SimQueries {
       e.select(col("vec_id").as("cid"), col("label"), col("embedding"),
           normD(col("embedding")).as("nrm"))
         .join(broadcast(q), col("label") =!= col("q_label"))
-        .withColumn("cos", call_function("cosine_sim", col("embedding"), col("qv")))
+        .withColumn("cos", cosineSim(col("embedding"), col("qv")))
         .where(!isnan(col("cos")))
         .withColumn("rn", row_number().over(w))
         .where(col("rn") <= 3)

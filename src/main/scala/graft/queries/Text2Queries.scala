@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import Qutil._
+import graft.functions.GraftFunctions.simhash60
 
 /** SURVEY §2.11 extensions — the text-analysis battery a training-data
   * pipeline runs per document (B-mandate): language-ID heuristic, quality
@@ -381,7 +382,6 @@ object Text2Queries {
     // fully oracle-checked (round 1 used xxhash64 — no DuckDB equivalent —
     // and had only structural locality tests).
     "text_simhash" -> ((s, d) => {
-      graft.functions.GraftFunctions.registerAll(s)
       val hs = transform(array_distinct(split(col("text"), " ")),
         t => hash60(t))
       // r15: the bit-vote fold + 60 extract-only threshold sites (which
@@ -392,7 +392,7 @@ object Text2Queries {
       // whole-stage codegen, one pass per doc.
       val sim = Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
-          call_function("simhash60", hs).as("simhash"))
+          simhash60(hs).as("simhash"))
       val bands = sim.select(col("doc_id"), col("source"), col("simhash"),
         explode(array((0 until 4).map(k => struct(lit(k).as("k"),
           shiftright(col("simhash"), k * 15).bitwiseAND(lit(0x7FFFL)).as("bv"))): _*)).as("b"))

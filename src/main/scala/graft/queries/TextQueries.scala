@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import Qutil._
+import graft.functions.GraftFunctions.{affineMin, bitandCount}
 
 /** SURVEY §2.11 — LLM-data-pipeline text operators (B-mandate): stats,
   * exact + near-duplicate dedup, MinHash/LSH, TF-IDF, n-grams.
@@ -46,7 +47,6 @@ object TextQueries {
     * source key spreads over `salts` reducers instead of 20. */
   private def bitmaskJaccardPairs(items: org.apache.spark.sql.DataFrame,
       threshold: Double, salts: Int = 8): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.registerAll(items.sparkSession)
     // dense ids 0..V-1 via the distributed two-pass rank (no global
     // single-partition window — open-vocabulary safe; ScaleSpec proves the
     // plan has no single-partition Exchange at a 100k-item vocabulary)
@@ -99,7 +99,7 @@ object TextQueries {
       // .BitAndCount — all-integer, exact equality with the old
       // zip_with/aggregate fold; ExpressionSpec pins it), whole-stage
       // codegen on the per-pair hot loop
-      .withColumn("inter", call_function("bitand_count", col("a_mask"), col("b_mask")))
+      .withColumn("inter", bitandCount(col("a_mask"), col("b_mask")))
       .withColumn("jacc", col("inter").cast(DoubleType) /
         (col("a_nt") + col("b_nt") - col("inter")))
       .where(col("jacc") >= threshold)
@@ -696,7 +696,6 @@ object TextQueries {
     * different signatures. */
   private[graft] def minhashSigs(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      graft.functions.GraftFunctions.registerAll(docs.sparkSession)
       val base = docs
         .select(col("doc_id"), col("source"),
           transform(array_distinct(split(col("text"), " ")),
@@ -715,7 +714,7 @@ object TextQueries {
       // (LshIndexProcessor/StarEdgeProcessor) keep byte-identical keys.
       val sigCols = (0 until 32).map { i =>
         val (a, b) = minhashAB(i)
-        call_function("affine_min", col("hs"),
+        affineMin(col("hs"),
           lit(a), lit(b), lit(minhashP)).as(s"h$i")
       }
       base.select(col("doc_id") +: col("source") +: sigCols: _*)

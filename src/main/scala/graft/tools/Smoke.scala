@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
+import graft.Verify.q
 
 /** Ad-hoc single-query runner for iteration: writes one query's result
   * parquet + its oracle SQL, so tools/check.py can verify it in isolation.
@@ -27,16 +28,6 @@ object Smoke {
         .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$n")
       println(f"[smoke] $n ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
-    // same escaping as Verify (the canonical writer)
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = names.filter(oracles.contains)
       .map(n => s"${q(n)}: ${q(oracles(n))}").mkString("{", ",", "}")
     java.nio.file.Files.writeString(

@@ -18,11 +18,6 @@ object TestSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // graft native functions (hash60, affine_min, ...) are session-scoped
-    // temp functions; register once so every suite's shared-def frames
-    // (reservoirKey, cmsBucket, minhash sigs) analyze (r16 — Qutil.hash60
-    // is native now and reaches far more helper paths than the r15 set)
-    graft.functions.GraftFunctions.registerAll(s)
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
