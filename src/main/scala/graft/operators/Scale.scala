@@ -36,7 +36,7 @@ object Scale {
     * table instead (the bucketedJoin landing shape) — documented rather
     * than seamed, because no in-repo iterative consumer reuses a
     * partitioning across rounds (graph_pagerank re-shuffles regardless;
-    * the r5b PLANS.md proof). The conf is read per call so a test can
+    * its plan_audit.tsv row counts the exchanges). The conf is read per call so a test can
     * scope reliable mode to a newSession clone (runtime confs don't
     * leak — the join_bloom_filtered precedent); unknown modes fail
     * loudly rather than silently downgrading durability. */

@@ -66,10 +66,10 @@ object GraphQueries {
       // Checkpoint the degree-annotated edge list once (reused by all
       // rounds). NOTE a pre-repartition(src) before the checkpoint does
       // NOT survive it (the LogicalRDD comes back with Unknown
-      // partitioning under AQE — verified in PLANS.md), so each round
-      // shuffles both join sides on the key; on a real cluster the edge
-      // side would be BUCKETED by src at land time to make rounds
-      // edge-stationary.
+      // partitioning under AQE; plan_audit.tsv counts the exchanges),
+      // so each round shuffles both join sides on the key; on a real
+      // cluster the edge side would be BUCKETED by src at land time to
+      // make rounds edge-stationary.
       val ed = e.join(deg, "src").transform(Scale.materialize)
       var rank = deg.select(col("src").as("id"), lit(1000000L).as("r"))
       // A FIXED small round count needs no per-round checkpoint (unlike

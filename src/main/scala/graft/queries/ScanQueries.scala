@@ -23,9 +23,9 @@ object ScanQueries {
       s"${java.lang.Integer.toHexString(d.hashCode)}_${ProcessHandle.current().pid()}"
 
   /** The partitioned-landing recipe — ONE definition shared by the
-    * declared sink_partitioned query, ScaleSpec's pruning test, and the
-    * PLANS.md pruned-re-read audit, so the evidence always documents the
-    * layout the query actually writes. The repartition co-locates rows
+    * declared sink_partitioned query and ScaleSpec's pruned-re-read
+    * test, so the test always checks the layout the query actually
+    * writes. The repartition co-locates rows
     * with their partition: one file per year directory instead of
     * numTasks x numYears small files (at 100 TB, unmanaged partitionBy
     * writes are a small-file explosion). */
@@ -85,7 +85,7 @@ object ScanQueries {
     // Partitioned S3-load pattern (README.md:7,9): re-land orders
     // partitioned by year (landPartitionedOrders), read back, count per
     // partition. At 100 TB the partitionBy column is the pruning key for
-    // every downstream read (proven: ScaleSpec + PLANS.md pruned re-read).
+    // every downstream read (proven: ScaleSpec's pruned re-read).
     "sink_partitioned" -> ((s, d) => {
       val out = scratch("sink_partitioned", d)
       landPartitionedOrders(s, d, out)
@@ -300,9 +300,9 @@ object ScanQueries {
         .orderBy("doc_id")
     }),
 
-    // Bucketed landing + shuffle-free join (r6c) — the cluster fix
-    // PLANS.md names for every iterative/reused join side ("bucket the
-    // edge side at land time"), demonstrated as a declared query: land
+    // Bucketed landing + shuffle-free join (r6c) — the cluster fix for
+    // every iterative/reused join side ("bucket the edge side at land
+    // time"), demonstrated as a declared query: land
     // orders AND lineitem bucketed by the join key (8 buckets, external
     // tables over per-invocation scratch paths), read back through the
     // catalog, and sort-merge-join them — the bucketed scans supply the

@@ -1,67 +1,123 @@
 package graft.tools
 
+import scala.reflect.ClassTag
+import scala.util.Try
 import graft.SparkEntry
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayTransform, ZipWith}
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution._
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins._
+import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
-/** Catalog-wide physical-plan audit (r15 optimization round): one row per
-  * declared query with the plan-shape counters the optimization guide
-  * says to look for (§2 Exchange count, §3 join strategies / cartesian
-  * products, §6 scan pushdown, §4 interpreted-HOF density, partitionless
-  * windows/SinglePartition exchanges). This is how "examine every
-  * operator" scales to 295 queries: the audit surfaces the outliers,
-  * the outliers get read by hand.
+/** Catalog-wide physical-plan audit: one row per declared query with
+  * plan-shape counters, frozen into `src/test/resources/plan_audit.tsv`.
+  * PlanGuardSpec rebuilds the table from the plans it guards and fails on
+  * any drift, so a plan change is a reviewed diff of this table.
+  * Regenerate deliberately with:
   *
-  *   sbt 'runMain graft.tools.PlanAudit /tmp/plan_audit.tsv'
+  *   sbt 'runMain graft.tools.PlanAudit'  (then review the git diff!)
   *
-  * Columns: query, exchanges, bhj, smj, shj, bnlj, cartesian,
-  * single_partition, window, generate, hof_sites (aggregate/transform/
-  * zip_with occurrences in the plan text — interpreted CodegenFallback
-  * density), scans, scans_with_filter. Uses the EXECUTED (pre-AQE-final)
-  * plan string of the analyzed frame — the same surface PlanGuardSpec
-  * greps. */
+  * Every counter is a count over one structural traversal (`allNodes`) of
+  * the executed (pre-AQE-final) plan. Node columns count one node class
+  * each; `single_part` counts shuffle exchanges to SinglePartition,
+  * `scans_with_filter` file scans with non-empty PushedFilters, and
+  * `hof_sites` aggregate/transform/zip_with expressions (interpreted
+  * CodegenFallback density). A query whose planning throws gets empty
+  * counters and its exception class under `error`. */
 object PlanAudit {
+  val tablePath = "src/test/resources/plan_audit.tsv"
+
+  /** AdaptiveSparkPlanExec does not expose its inner plan as a child, so
+    * recurse into it explicitly — pre-execution that is the initial
+    * physical plan (AQE may only improve on it at runtime). Subquery plans
+    * hang off expressions, not children, and are traversed too. */
+  def allNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => a +: allNodes(a.executedPlan)
+    case _ => p +: (p.children ++ p.subqueries).flatMap(allNodes)
+  }
+
+  private def node[T <: SparkPlan](implicit t: ClassTag[T]): SparkPlan => Int =
+    p => if (t.runtimeClass.isInstance(p)) 1 else 0
+
+  val columns: Seq[(String, SparkPlan => Int)] = Seq(
+    "shuffle_exchange" -> node[ShuffleExchangeExec],
+    "broadcast_exchange" -> node[BroadcastExchangeExec],
+    "single_part" -> {
+      case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => 1
+      case _ => 0
+    },
+    "bhj" -> node[BroadcastHashJoinExec],
+    "smj" -> node[SortMergeJoinExec],
+    "shj" -> node[ShuffledHashJoinExec],
+    "bnlj" -> node[BroadcastNestedLoopJoinExec],
+    "cartesian" -> node[CartesianProductExec],
+    "hash_agg" -> node[HashAggregateExec],
+    "object_agg" -> node[ObjectHashAggregateExec],
+    "sort_agg" -> node[SortAggregateExec],
+    "expand" -> node[ExpandExec],
+    "window" -> node[WindowExec],
+    "window_group_limit" -> node[WindowGroupLimitExec],
+    "take_ordered" -> node[TakeOrderedAndProjectExec],
+    "generate" -> node[GenerateExec],
+    "hof_sites" -> (_.expressions.map(_.collect {
+      case _: ArrayAggregate | _: ArrayTransform | _: ZipWith => ()
+    }.size).sum),
+    "scans" -> node[FileSourceScanExec],
+    "scans_with_filter" -> {
+      case s: FileSourceScanExec if s.metadata.get("PushedFilters").exists(_ != "[]") => 1
+      case _ => 0
+    },
+    "rdd_scans" -> node[RDDScanExec],
+    "local_scans" -> node[LocalTableScanExec],
+    "in_memory_scans" -> node[InMemoryTableScanExec])
+
+  val header: String = ("query" +: columns.map(_._1) :+ "error").mkString("\t")
+
+  /** One table row: the counters of a planned query, or empty counters and
+    * the exception class of a query whose planning threw. */
+  def row(name: String, plan: Try[SparkPlan]): String = {
+    val cells = plan.map { p =>
+      val nodes = allNodes(p)
+      columns.map { case (_, f) => nodes.map(f).sum.toString } :+ ""
+    }.recover { case e => Seq.fill(columns.size)("") :+ e.getClass.getSimpleName }.get
+    (name +: cells).mkString("\t")
+  }
+
+  /** Every declared query in name order, planned (executedPlan forced) on
+    * an empty cache: Spark swaps a persisted frame into any later plan
+    * that contains it, so without the clear the table would depend on
+    * what an earlier caller left cached. */
+  def plans(spark: SparkSession, sf: String): Iterator[(String, Try[QueryExecution])] = {
+    spark.catalog.clearCache()
+    SparkEntry.queries.toSeq.sortBy(_._1).iterator.map { case (name, fn) =>
+      name -> Try { val qe = fn(spark, sf).queryExecution; qe.executedPlan; qe }
+    }
+  }
+
+  def render(rows: Iterator[String]): String = (Iterator(header) ++ rows).mkString("", "\n", "\n")
+
+  def tsv(spark: SparkSession, sf: String): String =
+    render(plans(spark, sf).map { case (name, qe) => row(name, qe.map(_.executedPlan)) })
+
   def main(args: Array[String]): Unit = {
-    val out = args.headOption.getOrElse("/tmp/plan_audit.tsv")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    // the same confs and fixture as the test session, so the committed
+    // table is the one PlanGuardSpec rebuilds
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val sb = new StringBuilder
-    sb.append("query\texchanges\tbhj\tsmj\tshj\tbnlj\tcartesian\tsingle_part" +
-      "\twindow\tgenerate\thof_sites\tscans\tscans_with_filter\terror\n")
-    def cnt(s: String, pat: String): Int = pat.r.findAllMatchIn(s).length
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
-        val p = df.queryExecution.executedPlan.toString
-        val row = Seq(
-          cnt(p, "Exchange "),
-          cnt(p, "BroadcastHashJoin"),
-          cnt(p, "SortMergeJoin"),
-          cnt(p, "ShuffledHashJoin"),
-          cnt(p, "BroadcastNestedLoopJoin"),
-          cnt(p, "CartesianProduct"),
-          cnt(p, "SinglePartition"),
-          cnt(p, "Window"),
-          cnt(p, "Generate"),
-          cnt(p, "aggregate\\(") + cnt(p, "transform\\(") + cnt(p, "zip_with\\("),
-          cnt(p, "FileScan parquet"),
-          cnt(p, "PushedFilters: \\[[^\\]]")
-        ).mkString("\t")
-        sb.append(s"$name\t$row\t\n")
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          sb.append(s"$name\t\t\t\t\t\t\t\t\t\t\t\t\t${e.getClass.getSimpleName}\n")
-      }
-    }
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)
-    println(s"[planaudit] wrote $out")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(tablePath), tsv(spark, Golden.sfDir))
+    println(s"[planaudit] wrote $tablePath")
     spark.stop()
   }
 }

@@ -14,41 +14,6 @@ class CatalogSpec extends SparkSpec {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
-  test("Plans.normalize strips every volatile-token class (the r13 mechanical close check)") {
-    // PLANS.md is only mechanically diffable at an unchanged HEAD if the
-    // generator keeps stripping ALL volatile classes — pin each one on a
-    // synthetic explain fragment so a regression in the regex set fails
-    // here, not as a mysterious 2,000-line PLANS.md diff at close.
-    val sample =
-      """(1) Scan parquet
-        |Output [2]: [l_orderkey#1234L, l_extendedprice#56]
-        |(4) Exchange [plan_id=789] [id=#321]
-        |Scan ExistingRDD MapPartitionsRDD[42] at localCheckpoint at TextQueries.scala:256
-        |Location: InMemoryFileIndex [file:/tmp/graft_zorder_f03e707_20597]
-        |Location: InMemoryFileIndex [file:/tmp/graft_int8_cache_0a1b2c3_4242]
-        |Location: InMemoryFileIndex [file:/tmp/graft_labels_9fe01d2_20597/mat_12911_7]
-        |Output [2]: [cents#10L, (cast(__lrank#11 as bigint) + element_at(map(keys: [0,1,2,3], values: [0,1848,3697,5635]), __pid#12, None, true)) AS rnk#13L]""".stripMargin
-    val n = graft.tools.Plans.normalize(sample)
-    assert(!n.contains("#1234") && !n.contains("#56") && !n.contains("#321"),
-      "expression/exchange ids must normalize")
-    assert(n.contains("#NL") && n.contains("plan_id=N"), "plan ids must normalize")
-    assert(n.contains("MapPartitionsRDD[N]"), "RDD ids must normalize")
-    assert(n.contains("TextQueries.scala:N"), "checkpoint callsite lines must normalize")
-    assert(n.contains("graft_zorder_H_P"), "scratch hash+pid suffixes must normalize")
-    assert(n.contains("graft_int8_cache_H_P"),
-      "a DIGIT-bearing scratch name must still normalize (non-greedy name match)")
-    assert(n.contains("mat_P_N"),
-      "Scale.materialize scratch subdirs (mat_<pid>_<seq>) must normalize " +
-        "(r14 verdict: the raw pid leaked through the base-dir regex and " +
-        "broke PLANS.md byte-idempotency at HEAD)")
-    assert(n.contains("element_at(map(keys: [0,1,2,3], values: [V])"),
-      "globalRank's sampled offset-map VALUES must normalize (r14: the " +
-        "range sampler's seed mixes the RDD id, so offsets drift across " +
-        "JVM allocation histories); the stable partition-id keys stay")
-    val survivor = """#\d|plan_id=\d|RDD\[\d|scala:\d|_[0-9a-f]{6,}_\d|values: \[\d""".r.findFirstIn(n)
-    assert(survivor.isEmpty, s"volatile token survives normalization: $survivor in\n$n")
-  }
-
   test("every oracleSql key has a matching query") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracle without query: $orphans")

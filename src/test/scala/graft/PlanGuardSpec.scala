@@ -1,35 +1,24 @@
 package graft
 
-/** Catalog-wide plan contracts — PLANS.md's audit findings as
-  * failing-on-regression assertions. A query can silently lose its scale
+/** Catalog-wide plan contracts. A query can silently lose its scale
   * posture (a hint dropped, a planner change re-broadcasting an unbounded
   * side, a global window reintroduced); these tests pin the constructs
-  * that must never (re)appear in any declared plan. */
+  * that must never (re)appear in any declared plan, and freeze every
+  * query's plan shape in `plan_audit.tsv` so any other plan change shows
+  * up as a reviewed diff of that table. */
 class PlanGuardSpec extends SparkSpec {
   import org.apache.spark.sql.execution.SparkPlan
   import org.apache.spark.sql.execution.WholeStageCodegenExec
-  import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
   import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   import org.apache.spark.sql.execution.joins.CartesianProductExec
   import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
   import org.apache.spark.sql.catalyst.expressions.aggregate.{Partial, PartialMerge}
+  import graft.tools.PlanAudit
+  import graft.tools.PlanAudit.allNodes
 
   // join_cross is the deliberately-bounded 5x25 Cartesian demo.
   private val cartesianOk = Set("join_cross")
-
-  /** Structural traversal (r3 advice: the line-pattern matcher could go
-    * silently vacuous on a plan-format change). AdaptiveSparkPlanExec does
-    * not expose its inner plan as a child, so recurse into it explicitly —
-    * pre-execution that is the initial physical plan, which is exactly what
-    * these contracts pin (AQE may only improve on it at runtime). Subquery
-    * plans (scalar/IN subqueries hang off expressions, not children) are
-    * traversed too — the replaced string matcher saw them via treeString,
-    * and a CartesianProduct inside a subquery is just as scale-unsafe. */
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => a +: allNodes(a.executedPlan)
-    case _ => p +: (p.children ++ p.subqueries).flatMap(allNodes)
-  }
 
   /** A SinglePartition exchange is scale-safe ONLY when it feeds the final
     * stage of a keyless (scalar) aggregate: the shuffled stream is the
@@ -91,15 +80,14 @@ class PlanGuardSpec extends SparkSpec {
     }.sum
   }
 
-  test("catalog-wide: no CartesianProduct, no unbounded single-partition " +
-      "Exchange, hints on non-equi joins of checkpointed frames") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val qe = fn(spark, sf).queryExecution
+  /** Every declared query planned once: its plan-audit row and its
+    * scale-safety offenders, both read off the same plan. */
+  private lazy val audit: Seq[(String, Seq[String])] =
+    PlanAudit.plans(spark, sf).map { case (name, planned) =>
+      val offenders = planned.toOption.toSeq.flatMap { qe =>
         val plan = qe.executedPlan
-        val nodes = allNodes(plan)
         val cart =
-          if (!cartesianOk(name) && nodes.exists(_.isInstanceOf[CartesianProductExec]))
+          if (!cartesianOk(name) && allNodes(plan).exists(_.isInstanceOf[CartesianProductExec]))
             Seq(s"$name: CartesianProduct") else Nil
         val unhinted = unhintedNonEquiRddJoins(qe.optimizedPlan)
         val hintMiss = if (unhinted > 0)
@@ -108,9 +96,48 @@ class PlanGuardSpec extends SparkSpec {
         cart ++ hintMiss ++
           singlePartitionExchanges(plan).filterNot(isBoundedScalarAggFeed)
             .map(e => s"$name: Exchange SinglePartition over [${e.child.nodeName}]")
-    }
+      }
+      PlanAudit.row(name, planned.map(_.executedPlan)) -> offenders
+    }.toList
+
+  test("catalog-wide: no CartesianProduct, no unbounded single-partition " +
+      "Exchange, hints on non-equi joins of checkpointed frames") {
+    val offenders = audit.flatMap(_._2)
     assert(offenders.isEmpty,
       s"scale-unsafe constructs crept back into declared plans:\n${offenders.mkString("\n")}")
+  }
+
+  test("catalog-wide: every plan shape matches plan_audit.tsv") {
+    val url = getClass.getClassLoader.getResource("plan_audit.tsv")
+    assert(url != null, "plan_audit.tsv missing — run: sbt 'runMain graft.tools.PlanAudit'")
+    val frozen = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(url.toURI)), java.nio.charset.StandardCharsets.UTF_8)
+    val fresh = PlanAudit.render(audit.iterator.map(_._1))
+    def table(t: String): Seq[Map[String, String]] = {
+      val lines = t.linesIterator.map(_.split("\t", -1).toSeq).toSeq
+      lines.tail.map(r => lines.head.zip(r).toMap)
+    }
+    // a planning failure must fail here, never be pinned as the expected row
+    val failed = Seq("plan_audit.tsv" -> frozen, "this run" -> fresh).flatMap { case (where, t) =>
+      table(t).filter(_("error").nonEmpty).map(r => s"${r("query")}: planning failed in $where (${r("error")})")
+    }
+    if (failed.nonEmpty) fail(failed.mkString("\n"))
+    val was = table(frozen).map(r => r("query") -> r).toMap
+    val now = table(fresh).map(r => r("query") -> r).toMap
+    val drift =
+      (was.keySet -- now.keySet).toSeq.sorted.map(q => s"$q: row no longer produced") ++
+      (now.keySet -- was.keySet).toSeq.sorted.map(q => s"$q: new row, not in the table") ++
+      (was.keySet intersect now.keySet).toSeq.sorted.flatMap { q =>
+        (was(q).keySet ++ now(q).keySet).toSeq.sorted.flatMap { c =>
+          val (o, n) = (was(q).getOrElse(c, "<none>"), now(q).getOrElse(c, "<none>"))
+          if (o == n) None else Some(s"$q $c: $o -> $n")
+        }
+      }
+    if (drift.nonEmpty) fail("plan shapes drifted from plan_audit.tsv (query column: " +
+      "old -> new); if deliberate, regenerate with sbt 'runMain graft.tools.PlanAudit' " +
+      s"and review the diff:\n${drift.mkString("\n")}")
+    assert(fresh == frozen, "plan_audit.tsv differs from a fresh audit in layout only " +
+      "(header order or whitespace); regenerate it")
   }
 
   test("self-check: the bounded-scalar-agg exception matches real plans") {

@@ -66,14 +66,9 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("source_bucketed_join: the bucketed SMJ subtree is exchange-free") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-    def allNodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => a +: allNodes(a.executedPlan)
-      case _ => p +: (p.children ++ p.subqueries).flatMap(allNodes)
-    }
+    import graft.tools.PlanAudit.allNodes
     val df = SparkEntry.queries("source_bucketed_join")(spark, sf)
     val plan = df.queryExecution.executedPlan
     val smjs = allNodes(plan).collect { case j: SortMergeJoinExec => j }
@@ -96,12 +91,8 @@ class SourcesSpec extends SparkSpec {
     // selective dim filter Catalyst plans no pruning at all. Same
     // landing + join shape as the declared query, local temp dir.
     import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    def allNodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => a +: allNodes(a.executedPlan)
-      case _ => p +: (p.children ++ p.subqueries).flatMap(allNodes)
-    }
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import graft.tools.PlanAudit.allNodes
     val dir = java.nio.file.Files.createTempDirectory("graft_dpp_spec").toString
     Tables.orders(spark, sf)
       .selectExpr("o_orderkey", "o_orderpriority AS prio",

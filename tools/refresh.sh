@@ -1,8 +1,9 @@
 #!/bin/sh
 # One-command round-artifact refresh (r4 verdict optional ask #6):
-# regenerates every derived artifact that can silently go stale after a
-# semantic change, in dependency order. Review the git diff afterwards —
-# an unexpected golden/plan delta is the point of running this.
+# regenerates the golden digests and the plan-shape table in one sbt
+# call. GoldenSpec and PlanGuardSpec fail until a semantic or plan change
+# is regenerated here; review the git diff afterwards — an unexpected
+# golden/plan delta is the point of running this.
 #
 #   sh tools/refresh.sh
 #
@@ -10,5 +11,5 @@
 # host and median discipline — see CLAUDE.md "medians, always").
 set -e
 cd "$(dirname "$0")/.."
-sbt -batch 'runMain graft.tools.Golden' 'runMain graft.tools.Plans'
-echo "[refresh] done — review: git diff src/test/resources/golden/digests.txt PLANS.md"
+sbt -batch 'runMain graft.tools.Golden' 'runMain graft.tools.PlanAudit'
+echo "[refresh] done — review: git diff src/test/resources/golden/digests.txt src/test/resources/plan_audit.tsv"
