@@ -1,38 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.tools.Harness
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Execute a query END-TO-END: write to the noop sink, not count().
-    // count() lets Catalyst elide final Sorts and project nothing, which
-    // flattered sort/projection-heavy queries (round-2 verdict); the noop
-    // sink materializes every output row through the full plan and
-    // discards it — the standard Spark benchmarking sink.
-    // by-name df: queries that do real work at CONSTRUCTION time
-    // (sink_partitioned's write, globalRank's count jobs) must fail inside
-    // the try — a failed query is loudly visible, never a bench abort
-    // NonFatal only (r3 advice): an OutOfMemoryError / codegen LinkageError
-    // means the session may be corrupted — timing the remaining queries
-    // against it would write misleading numbers, so fatal errors abort.
-    def exec(name: String, df: => org.apache.spark.sql.DataFrame): Unit =
-      try df.write.mode("overwrite").format("noop").save() catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] $name FAILED: $e")
-      }
-    // warm the session (scheduler, codegen, parquet footer reads) so the
-    // first measured query doesn't absorb startup cost
-    spark.range(1000).selectExpr("sum(id)").collect()
-    SparkEntry.queries.get("agg_pricing_summary").foreach(f => exec("warmup", f(spark, sfDir)))
+    val sfDir = Harness.envSfDir
+    val spark = Harness.session()
+    Harness.warmUp(spark, sfDir, "bench")
     // De-spiked timing (r7): the FIRST evaluation of a new HOF-heavy
     // plan shape costs ~10-15 s of Janino codegen once per JVM (r6c),
     // so every one-shot bench round read 4-8x spikes on a handful of
@@ -65,18 +37,13 @@ object Bench {
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
     val results = SparkEntry.queries.map { case (name, fn) =>
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        exec(name, fn(spark, sfDir))
-        (System.nanoTime() - t0) / 1e9
-      }
+      // never unpersists between evaluations (the contract bench keeps
+      // every query's blocks, unlike Harness.reps)
+      def once(): Double = Harness.time(Harness.exec("bench", name, fn(spark, sfDir)))
       val t1 = once()
       val value = repsEnv match {
         case Some(1) => t1
-        case Some(n) =>
-          val sorted = Seq.fill(n - 1)(once()).sorted
-          if (sorted.size % 2 == 1) sorted(sorted.size / 2)
-          else (sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2.0
+        case Some(n) => Harness.median(t1 +: Seq.fill(n - 1)(once()))
         case None =>
           // re-time on the absolute tail OR on a 2x departure from the
           // recorded reference (0.2 s floor keeps micro-jitter out)

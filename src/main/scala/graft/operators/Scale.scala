@@ -193,27 +193,22 @@ object Scale {
     // r16 (r15 verdict "What's wrong" #2): the hot set is only bounded by
     // n_bucket_rows/hotMin — realistic LSH histograms keep it tiny, but an
     // adversarial distribution (millions of just-hot buckets) would OOM
-    // the driver through the broadcast. Guard: cache + count the bounded
-    // hot frame (the count job materializes the cache, so the broadcast
-    // build below reads the cached rows instead of re-running the size
-    // aggregate); above graft.lanedJoin.hotCap (default 2^20 keys — a
-    // few tens of MB broadcast at worst), fall back to UNIFORM laning for
-    // every bucket (the pre-r15 shape): graceful lanes-fold replication
-    // instead of a fatal broadcast. Output is row-identical on EVERY
-    // path (a pair meets in exactly one lane cell per shared bucket for
-    // ANY lane assignment), so the cap is a pure efficiency knob —
-    // PropertySpec pins the fallback path on a planted many-hot-buckets
-    // frame. The cache has no safe release point (the result is consumed
-    // lazily — the globalRank contract); it is bounded rows by the cap.
-    val hotCap = left.sparkSession.conf
-      .get("graft.lanedJoin.hotCap", (1 << 20).toString).toLong
-    val hot = hotRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nHot = hot.count()
+    // the driver through the broadcast. Guard: collect at most hotCap + 1
+    // hot keys (one job, nothing persisted); above graft.lanedJoin.hotCap
+    // (default 2^20 keys — a few tens of MB broadcast at worst), fall back
+    // to UNIFORM laning for every bucket (the pre-r15 shape): graceful
+    // lanes-fold replication instead of a fatal broadcast. Output is
+    // row-identical on EVERY path (a pair meets in exactly one lane cell
+    // per shared bucket for ANY lane assignment), so the cap is a pure
+    // efficiency knob — PropertySpec pins the fallback path on a planted
+    // many-hot-buckets frame.
+    val spark = left.sparkSession
+    val hotCap = spark.conf.get("graft.lanedJoin.hotCap", (1 << 20).toString).toInt
+    val hotRows = hotRaw.limit(hotCap + 1).collect()
     val lanesArr = array((0 until lanes).map(lit): _*)
     val one = array(lit(0))
     val (l, r) =
-      if (nHot > hotCap) {
-        hot.unpersist(blocking = false)
+      if (hotRows.length > hotCap) {
         (left
           .withColumn("__lx", laneCol(col(leftId), lanes))
           .withColumn("__ly", explode(lanesArr)),
@@ -221,6 +216,9 @@ object Scale {
           .withColumn("__lx", explode(lanesArr))
           .withColumn("__ly", laneCol(col(rightId), lanes)))
       } else {
+        // a local relation of the collected keys; when it is empty the
+        // optimizer drops both flag joins (every bucket is cold, cell (0, 0))
+        val hot = spark.createDataFrame(java.util.Arrays.asList(hotRows: _*), hotRaw.schema)
         (left.join(broadcast(hot), keys, "left")
           .withColumn("__lx",
             when(col("__hot").isNotNull, laneCol(col(leftId), lanes)).otherwise(lit(0)))

@@ -14,7 +14,6 @@ import graft.SparkEntry
   */
 object Golden {
   val goldenPath = "src/test/resources/golden/digests.txt"
-  val sfDir = "/root/testdata/sf0.001"
 
   /** Canonical digest: rows in the query's own order, fields joined with
     * (0x1F,0x1E) separators, UTF-8 sha-256 hex. */
@@ -32,18 +31,11 @@ object Golden {
 
   def computeAll(spark: SparkSession): Seq[(String, String)] =
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> digest(fn(spark, sfDir))
+      name -> digest(fn(spark, Harness.sf0001))
     }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.fixtureCores)
     val lines = computeAll(spark).map { case (n, d) => s"$n $d" }
     Files.createDirectories(Paths.get(goldenPath).getParent)
     Files.writeString(Paths.get(goldenPath), lines.mkString("", "\n", "\n"))

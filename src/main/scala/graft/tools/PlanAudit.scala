@@ -105,18 +105,10 @@ object PlanAudit {
     render(plans(spark, sf).map { case (name, qe) => row(name, qe.map(_.executedPlan)) })
 
   def main(args: Array[String]): Unit = {
-    // the same confs and fixture as the test session, so the committed
-    // table is the one PlanGuardSpec rebuilds
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(tablePath), tsv(spark, Golden.sfDir))
+    // the test session's core count and fixture, so the committed table
+    // is the one PlanGuardSpec rebuilds
+    val spark = Harness.session(Harness.fixtureCores)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(tablePath), tsv(spark, Harness.sf0001))
     println(s"[planaudit] wrote $tablePath")
     spark.stop()
   }

@@ -1966,10 +1966,14 @@ class PropertySpec extends SparkSpec {
       .select(col("x.id").as("a"), col("y.id").as("b"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(plain.size === 160 * 159 / 2 + 8 * 7 / 2, "planted pair mass")
+    import org.apache.spark.sql.graft.CacheProbe
+    val cachedBefore = CacheProbe.entries(spark)
     val got = Scale.lanedBucketJoin(df, df, Seq("bk"), "id", "id", 8)
       .where(col("x.id") < col("y.id"))
       .select(col("x.id").as("a"), col("y.id").as("b"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(CacheProbe.entries(spark) === cachedBefore,
+      "the hot set must not stay cached: nothing would ever release it")
     assert(got.length === got.toSet.size,
       "a pair meets in exactly ONE lane cell — no double emission")
     assert(got.toSet === plain, "laned join must be row-identical to the plain join")

@@ -2,29 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.tools.Harness
 
 /** Shared session for all suites (one JVM-wide session, SURVEY §5.2.2). */
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-  val sf0001 = "/root/testdata/sf0.001"
-  val sf001 = "/root/testdata/sf0.01"
+  lazy val spark: SparkSession = Harness.session(Harness.fixtureCores)
+  val sf0001 = Harness.sf0001
+  val sf001 = Harness.sf001
   /** Bench-scale fixture — the largest SF checks run against. Tests that
     * read it should assume() it exists so a small checkout stays green. */
-  val sf01 = "/root/testdata/sf0.1"
+  val sf01 = Harness.sf01
 }
 
 trait SparkSpec extends AnyFunSuite {
