@@ -456,17 +456,8 @@ object SampleQueries {
         .withColumn("split", splitCol(col("doc_id")))
         .select(col("doc_id"), col("split"),
           explode(split(col("text"), " ")).as("tok"))
-      // cache, not localCheckpoint (r9c review): the model feeds TWO
-      // consumers (the stats aggregate and the scoring join), so the
-      // train-token scan + groupBy would run twice uncached — but a
-      // checkpoint would strip the catalyst stats the deliberately
-      // UNHINTED join below relies on (broadcast at fixture scale,
-      // token-key shuffle when the vocab outgrows memory). cache()
-      // deduplicates execution while planning still sees the stats —
-      // the one cached frame in the catalog, and why.
       val model = toks.where(col("split") === "train")
         .groupBy("tok").agg(count(lit(1)).as("cnt"))
-        .cache()
       val stats = model.agg(count(lit(1)).as("vsz"), sum("cnt").as("ntr"))
       toks.where(col("split") === "test")
         .join(model, Seq("tok"), "left")

@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
-import org.apache.spark.sql.streaming.ValueState
 
 /** Streaming token-budget admission — the streaming face of the batch
   * sample_token_budget query: docs land incrementally (the Airflow-tick
@@ -23,31 +21,6 @@ import org.apache.spark.sql.streaming.ValueState
   * re-delivering an admitted doc double-spends its tokens, so this stage
   * requires exactly-once upstream delivery (or the dedup processor in
   * front of it). */
-class BudgetProcessor
-  extends StatefulProcessor[String, BudgetProcessor.Doc, BudgetProcessor.Admit] {
-
-  @transient private var spent: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    spent = getHandle.getValueState[Long]("spent",
-      Encoders.scalaLong, TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[BudgetProcessor.Doc],
-      timerValues: TimerValues): Iterator[BudgetProcessor.Admit] = {
-    var s = if (spent.exists()) spent.get() else 0L
-    val admitted = Seq.newBuilder[BudgetProcessor.Admit]
-    // batch-parity order INSIDE the micro-batch: (order key, doc_id)
-    rows.toSeq.sortBy(d => (d.hk, d.doc_id)).foreach { d =>
-      if (s < BudgetProcessor.budget) {
-        admitted += BudgetProcessor.Admit(d.doc_id, d.source, d.n_tok, s)
-        s += d.n_tok
-      }
-    }
-    spent.update(s)
-    admitted.result().iterator
-  }
-}
-
 object BudgetProcessor {
   /** Candidate doc: id, source, token count, salted order key. */
   case class Doc(doc_id: Long, source: String, n_tok: Int, hk: Long)
@@ -56,6 +29,20 @@ object BudgetProcessor {
   case class Admit(doc_id: Long, source: String, n_tok: Int, cum_before: Long)
 
   val budget: Long = graft.queries.SampleQueries.tokenBudget
+
+  private[streaming] def fold(key: String, spent: Option[Long],
+      rows: Iterator[Doc]): (Option[Long], Iterator[Admit]) = {
+    var s = spent.getOrElse(0L)
+    val admitted = Seq.newBuilder[Admit]
+    // batch-parity order INSIDE the micro-batch: (order key, doc_id)
+    rows.toSeq.sortBy(d => (d.hk, d.doc_id)).foreach { d =>
+      if (s < budget) {
+        admitted += Admit(d.doc_id, d.source, d.n_tok, s)
+        s += d.n_tok
+      }
+    }
+    (Some(s), admitted.result().iterator)
+  }
 
   /** Stamp the shared token count + order key onto a (doc_id, source,
     * text) frame — batch or readStream (row-local expressions). */
@@ -69,7 +56,7 @@ object BudgetProcessor {
   /** Incremental per-source budget admission over a doc stream. */
   def admitStream(docs: DataFrame): Dataset[Admit] = {
     import docs.sparkSession.implicits._
-    withBudgetCols(docs).groupByKey(_.source)
-      .transformWithState(new BudgetProcessor, TimeMode.None(), OutputMode.Append())
+    FoldProcessor.run(withBudgetCols(docs).groupByKey(_.source),
+      "spent", Encoders.scalaLong)(fold)
   }
 }

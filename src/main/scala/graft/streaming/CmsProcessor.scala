@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
-import org.apache.spark.sql.streaming.ValueState
 
 /** Streaming count-min sketch — the incremental face of the batch
   * text_cms_sketch grid. The grid cell a token lands in is computed
@@ -27,29 +25,6 @@ import org.apache.spark.sql.streaming.ValueState
   * depth×width (256), not by the token stream — hash-partitioned by
   * cell like any keyed aggregation; estimates cost one bounded lookup
   * per probed term. */
-class CmsProcessor
-  extends StatefulProcessor[Int, CmsProcessor.Ev, CmsProcessor.Cell] {
-  import CmsProcessor._
-
-  @transient private var st: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Long]("cnt",
-      Encoders.scalaLong, TTLConfig.NONE)
-
-  override def handleInputRows(key: Int, rows: Iterator[Ev],
-      timerValues: TimerValues): Iterator[Cell] = {
-    var c: Long = if (st.exists()) st.get() else 0L
-    var seen = false
-    rows.foreach { _ => seen = true; c += 1L }
-    if (!seen) Iterator.empty
-    else {
-      st.update(c)
-      Iterator.single(Cell(key, key / 64, key % 64, c))
-    }
-  }
-}
-
 object CmsProcessor {
   case class Ev(cell: Int)
 
@@ -57,15 +32,23 @@ object CmsProcessor {
     * max-cnt row per cell in an append sink is the current counter. */
   case class Cell(cell: Int, r: Int, b: Int, cnt: Long)
 
+  private[streaming] def fold(key: Int, prior: Option[Long],
+      rows: Iterator[Ev]): (Option[Long], Iterator[Cell]) = {
+    var c: Long = prior.getOrElse(0L)
+    rows.foreach { _ => c += 1L }
+    (Some(c), Iterator.single(Cell(key, key / 64, key % 64, c)))
+  }
+
   /** Incremental CMS over an unbounded (or replayed) cell stream —
     * `cell` must be r·64 + cmsBucket(tok, r), stamped upstream with
     * the shared definition. Works identically on a bounded batch
     * Dataset. */
   def cmsStream(rows: DataFrame): Dataset[Cell] = {
     import rows.sparkSession.implicits._
-    rows.select(col("cell").cast("int").as("cell"))
-      .as[Ev]
-      .groupByKey(_.cell)
-      .transformWithState(new CmsProcessor, TimeMode.None(), OutputMode.Append())
+    FoldProcessor.run(
+      rows.select(col("cell").cast("int").as("cell"))
+        .as[Ev]
+        .groupByKey(_.cell),
+      "cnt", Encoders.scalaLong)(fold)
   }
 }

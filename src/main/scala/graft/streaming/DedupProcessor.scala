@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
-import org.apache.spark.sql.streaming.ValueState
 
 /** Streaming incremental EXACT dedup — the streaming face of the batch
   * text_normalize_dedup_exact query (r4 verdict ask #2): keyed by the
@@ -21,32 +19,19 @@ import org.apache.spark.sql.streaming.ValueState
   * micro-batch the smallest doc_id wins, so one batch containing a whole
   * replay reproduces the batch result exactly (StreamingSpec proves both).
   */
-class DedupProcessor
-  extends StatefulProcessor[String, DedupProcessor.Doc, DedupProcessor.Doc] {
-
-  @transient private var seen: ValueState[Boolean] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    seen = getHandle.getValueState[Boolean]("seen",
-      Encoders.scalaBoolean, TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[DedupProcessor.Doc],
-      timerValues: TimerValues): Iterator[DedupProcessor.Doc] = {
-    if (seen.exists()) Iterator.empty
-    else {
-      // first appearance of this content hash: keep the smallest doc_id in
-      // the delivering micro-batch (batch-parity tie-break), mark seen
-      val first = rows.minBy(_.doc_id)
-      seen.update(true)
-      Iterator.single(first)
-    }
-  }
-}
-
 object DedupProcessor {
   /** One surviving (or candidate) doc: id, language, normalized content
     * hash — the same three columns the batch dedup query emits. */
   case class Doc(doc_id: Long, lang: String, h: String)
+
+  private[streaming] def fold(key: String, seen: Option[Boolean],
+      rows: Iterator[Doc]): (Option[Boolean], Iterator[Doc]) =
+    if (seen.isDefined) (None, Iterator.empty)
+    else {
+      // first appearance of this content hash: keep the smallest doc_id in
+      // the delivering micro-batch (batch-parity tie-break), mark seen
+      (Some(true), Iterator.single(rows.minBy(_.doc_id)))
+    }
 
   /** Stamp the shared normalized content hash onto a (doc_id, lang, text)
     * frame — batch or readStream; the expression is row-local so the same
@@ -61,7 +46,7 @@ object DedupProcessor {
     * stream. Works identically on a bounded batch Dataset. */
   def dedupStream(docs: DataFrame): Dataset[Doc] = {
     import docs.sparkSession.implicits._
-    withContentHash(docs).groupByKey(_.h)
-      .transformWithState(new DedupProcessor, TimeMode.None(), OutputMode.Append())
+    FoldProcessor.run(withContentHash(docs).groupByKey(_.h),
+      "seen", Encoders.scalaBoolean)(fold)
   }
 }

@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
-import org.apache.spark.sql.streaming.ValueState
 
 /** Streaming drift-histogram monitor — the streaming face of the batch
   * drift family (dq_drift_psi / ks / js / emd all count the SAME
@@ -27,31 +25,6 @@ import org.apache.spark.sql.streaming.ValueState
   * Scale posture: state is two longs per bucket — bounded by the grid
   * width, not the event count — hash-partitioned by bucket like any
   * keyed aggregation. */
-class DriftProcessor
-  extends StatefulProcessor[Int, DriftProcessor.Ev, DriftProcessor.Hist] {
-  import DriftProcessor._
-
-  @transient private var st: ValueState[Hist] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Hist]("hist",
-      Encoders.product[Hist], TTLConfig.NONE)
-
-  override def handleInputRows(key: Int, rows: Iterator[Ev],
-      timerValues: TimerValues): Iterator[Hist] = {
-    var h: Hist = if (st.exists()) st.get() else Hist(key, 0L, 0L, 0L)
-    var seen = false
-    rows.foreach { e =>
-      seen = true
-      h =
-        if (e.cohort == 0) Hist(key, h.base_cnt + 1L, h.cur_cnt, h.n + 1L)
-        else Hist(key, h.base_cnt, h.cur_cnt + 1L, h.n + 1L)
-    }
-    if (!seen) Iterator.empty
-    else { st.update(h); Iterator.single(h) }
-  }
-}
-
 object DriftProcessor {
   case class Ev(bucket: Int, cohort: Int)
 
@@ -60,15 +33,27 @@ object DriftProcessor {
     * is the current histogram cell. */
   case class Hist(bucket: Int, base_cnt: Long, cur_cnt: Long, n: Long)
 
+  private[streaming] def fold(key: Int, prior: Option[Hist],
+      rows: Iterator[Ev]): (Option[Hist], Iterator[Hist]) = {
+    var h: Hist = prior.getOrElse(Hist(key, 0L, 0L, 0L))
+    rows.foreach { e =>
+      h =
+        if (e.cohort == 0) Hist(key, h.base_cnt + 1L, h.cur_cnt, h.n + 1L)
+        else Hist(key, h.base_cnt, h.cur_cnt + 1L, h.n + 1L)
+    }
+    (Some(h), Iterator.single(h))
+  }
+
   /** Incremental drift histogram over an unbounded (or replayed)
     * (bucket, cohort) stream. Works identically on a bounded batch
     * Dataset. */
   def driftStream(rows: DataFrame): Dataset[Hist] = {
     import rows.sparkSession.implicits._
-    rows.select(col("bucket").cast("int").as("bucket"),
-        col("cohort").cast("int").as("cohort"))
-      .as[Ev]
-      .groupByKey(_.bucket)
-      .transformWithState(new DriftProcessor, TimeMode.None(), OutputMode.Append())
+    FoldProcessor.run(
+      rows.select(col("bucket").cast("int").as("bucket"),
+          col("cohort").cast("int").as("cohort"))
+        .as[Ev]
+        .groupByKey(_.bucket),
+      "hist", Encoders.product[Hist])(fold)
   }
 }

@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
-import org.apache.spark.sql.streaming.ValueState
 
 /** Streaming per-source freshness monitor — the streaming face of the
   * batch dq_freshness query (round-6 candidate list): keyed by
@@ -25,30 +23,6 @@ import org.apache.spark.sql.streaming.ValueState
   * Scale posture: state is one fixed-width pair per source — bounded by
   * the source-key space, not the event count — hash-partitioned by the
   * grouping key like any keyed aggregation. */
-class FreshnessProcessor
-  extends StatefulProcessor[String, FreshnessProcessor.Ev, FreshnessProcessor.Fresh] {
-  import FreshnessProcessor._
-
-  @transient private var st: ValueState[Fresh] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Fresh]("fresh",
-      Encoders.product[Fresh], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[Ev],
-      timerValues: TimerValues): Iterator[Fresh] = {
-    var f: Fresh = if (st.exists()) st.get() else null
-    rows.foreach { e =>
-      val tUs = Streams.toUs(e.ts)
-      f =
-        if (f == null) Fresh(key, tUs, 1L)
-        else Fresh(key, math.max(f.last_us, tUs), f.n + 1L)
-    }
-    if (f == null) Iterator.empty
-    else { st.update(f); Iterator.single(f) }
-  }
-}
-
 object FreshnessProcessor {
   case class Ev(event_type: String, ts: java.sql.Timestamp)
 
@@ -57,13 +31,26 @@ object FreshnessProcessor {
     * append sink is the current watermark. */
   case class Fresh(event_type: String, last_us: Long, n: Long)
 
+  private[streaming] def fold(key: String, prior: Option[Fresh],
+      rows: Iterator[Ev]): (Option[Fresh], Iterator[Fresh]) = {
+    var f: Fresh = prior.orNull
+    rows.foreach { e =>
+      val tUs = Streams.toUs(e.ts)
+      f =
+        if (f == null) Fresh(key, tUs, 1L)
+        else Fresh(key, math.max(f.last_us, tUs), f.n + 1L)
+    }
+    (Some(f), Iterator.single(f))
+  }
+
   /** Incremental per-source freshness over an unbounded (or replayed)
     * event stream. Works identically on a bounded batch Dataset. */
   def freshnessStream(events: DataFrame): Dataset[Fresh] = {
     import events.sparkSession.implicits._
-    events.select(col("event_type"), col("ts"))
-      .as[Ev]
-      .groupByKey(_.event_type)
-      .transformWithState(new FreshnessProcessor, TimeMode.None(), OutputMode.Append())
+    FoldProcessor.run(
+      events.select(col("event_type"), col("ts"))
+        .as[Ev]
+        .groupByKey(_.event_type),
+      "fresh", Encoders.product[Fresh])(fold)
   }
 }

@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions.{col, explode, split}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
-import org.apache.spark.sql.streaming.ValueState
 
 /** Streaming per-source heavy hitters — a Misra-Gries frequency sketch
   * per key over an unbounded token stream (the vocabulary monitor a
@@ -26,34 +24,6 @@ import org.apache.spark.sql.streaming.ValueState
   * bounded by key-space x k, never by stream length; emission after
   * each batch is the <= k-row snapshot tagged with the running n so an
   * append-sink consumer keeps the max-n rows per source. */
-class HeavyHitterProcessor(k: Int)
-  extends StatefulProcessor[String, HeavyHitterProcessor.Tok, HeavyHitterProcessor.Hit] {
-  import HeavyHitterProcessor._
-
-  @transient private var st: ValueState[Sketch] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Sketch]("mg",
-      Encoders.product[Sketch], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[Tok],
-      timerValues: TimerValues): Iterator[Hit] = {
-    var sk: Sketch = if (st.exists()) st.get() else Sketch(Map.empty, 0L)
-    rows.foreach { t =>
-      val m = sk.counts
-      val nm = m.get(t.tok) match {
-        case Some(c) => m.updated(t.tok, c + 1L)
-        case None if m.size < k => m.updated(t.tok, 1L)
-        case None => m.collect { case (w, c) if c > 1L => w -> (c - 1L) }
-      }
-      sk = Sketch(nm, sk.n + 1L)
-    }
-    st.update(sk)
-    sk.counts.toSeq.sortBy { case (w, c) => (-c, w) }
-      .iterator.map { case (w, c) => Hit(key, w, c, sk.n) }
-  }
-}
-
 object HeavyHitterProcessor {
   case class Tok(source: String, tok: String)
 
@@ -64,13 +34,30 @@ object HeavyHitterProcessor {
 
   private[streaming] case class Sketch(counts: Map[String, Long], n: Long)
 
+  private[streaming] def fold(k: Int)(key: String, prior: Option[Sketch],
+      rows: Iterator[Tok]): (Option[Sketch], Iterator[Hit]) = {
+    var sk: Sketch = prior.getOrElse(Sketch(Map.empty, 0L))
+    rows.foreach { t =>
+      val m = sk.counts
+      val nm = m.get(t.tok) match {
+        case Some(c) => m.updated(t.tok, c + 1L)
+        case None if m.size < k => m.updated(t.tok, 1L)
+        case None => m.collect { case (w, c) if c > 1L => w -> (c - 1L) }
+      }
+      sk = Sketch(nm, sk.n + 1L)
+    }
+    (Some(sk), sk.counts.toSeq.sortBy { case (w, c) => (-c, w) }
+      .iterator.map { case (w, c) => Hit(key, w, c, sk.n) })
+  }
+
   /** Incremental per-source token heavy hitters over a document stream
     * (whitespace tokens — the same tokenizer as every batch text query). */
   def hitterStream(docs: DataFrame, k: Int): Dataset[Hit] = {
     import docs.sparkSession.implicits._
-    docs.select(col("source"), explode(split(col("text"), " ")).as("tok"))
-      .as[Tok]
-      .groupByKey(_.source)
-      .transformWithState(new HeavyHitterProcessor(k), TimeMode.None(), OutputMode.Append())
+    FoldProcessor.run(
+      docs.select(col("source"), explode(split(col("text"), " ")).as("tok"))
+        .as[Tok]
+        .groupByKey(_.source),
+      "mg", Encoders.product[Sketch])(fold(k))
   }
 }

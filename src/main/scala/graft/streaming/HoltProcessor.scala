@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
-import org.apache.spark.sql.streaming.ValueState
 
 /** Streaming Holt linear-trend smoothing — the streaming face of the batch
   * ts_holt_forecast query: keyed by series id (here a constant for the
@@ -26,53 +24,39 @@ import org.apache.spark.sql.streaming.ValueState
   * State is one fixed-width (day, l, b) record per key, hash-partitioned
   * by the key — the shape that holds at any number of series.
   */
-class HoltProcessor
-  extends StatefulProcessor[Long, HoltProcessor.Obs, HoltProcessor.Fit] {
-  import HoltProcessor._
-
-  @transient private var st: ValueState[St] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[St]("holt", Encoders.product[St], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[Obs],
-      timerValues: TimerValues): Iterator[Fit] = {
-    val sorted = rows.toIndexedSeq.sortBy(_.day)
-    if (sorted.isEmpty) Iterator.empty
-    else {
-      var cur: St = if (st.exists()) st.get() else null
-      val out = Vector.newBuilder[Fit]
-      sorted.foreach { o =>
-        if (cur == null) {
-          val l0 = o.cnt * 1000000L
-          cur = St(o.day, l0, 0L)
-          out += Fit(key, o.day, o.cnt, l0, 0L, l0)
-        } else {
-          val fitted = cur.l + cur.b
-          val lN = (o.cnt * 1000000L + cur.l + cur.b) / 2L
-          val bN = (lN - cur.l) / 4L + (3L * cur.b) / 4L
-          cur = St(o.day, lN, bN)
-          out += Fit(key, o.day, o.cnt, lN, bN, fitted)
-        }
-      }
-      st.update(cur)
-      out.result().iterator
-    }
-  }
-}
-
 object HoltProcessor {
   case class Obs(series: Long, day: Long, cnt: Long)
   case class St(day: Long, l: Long, b: Long)
   case class Fit(series: Long, day: Long, cnt: Long, level_u: Long,
     trend_u: Long, fitted_u: Long)
 
+  private[streaming] def fold(key: Long, prior: Option[St],
+      rows: Iterator[Obs]): (Option[St], Iterator[Fit]) = {
+    var cur: St = prior.orNull
+    val out = Vector.newBuilder[Fit]
+    rows.toIndexedSeq.sortBy(_.day).foreach { o =>
+      if (cur == null) {
+        val l0 = o.cnt * 1000000L
+        cur = St(o.day, l0, 0L)
+        out += Fit(key, o.day, o.cnt, l0, 0L, l0)
+      } else {
+        val fitted = cur.l + cur.b
+        val lN = (o.cnt * 1000000L + cur.l + cur.b) / 2L
+        val bN = (lN - cur.l) / 4L + (3L * cur.b) / 4L
+        cur = St(o.day, lN, bN)
+        out += Fit(key, o.day, o.cnt, lN, bN, fitted)
+      }
+    }
+    (Some(cur), out.result().iterator)
+  }
+
   /** Incremental Holt fit over a keyed (series, day, cnt) stream. */
   def holtStream(obs: DataFrame): Dataset[Fit] = {
     import obs.sparkSession.implicits._
-    obs.select(col("series"), col("day"), col("cnt"))
-      .as[Obs]
-      .groupByKey(_.series)
-      .transformWithState(new HoltProcessor, TimeMode.None(), OutputMode.Append())
+    FoldProcessor.run(
+      obs.select(col("series"), col("day"), col("cnt"))
+        .as[Obs]
+        .groupByKey(_.series),
+      "holt", Encoders.product[St])(fold)
   }
 }

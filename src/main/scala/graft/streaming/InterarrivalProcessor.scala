@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
-import org.apache.spark.sql.streaming.ValueState
 
 /** Streaming inter-arrival gaps — the streaming face of the batch
   * ts_interarrival histogram: keyed by user_id, a ValueState holds the
@@ -20,47 +18,32 @@ import org.apache.spark.sql.streaming.ValueState
   * within a batch any order is fine (sorted here). State is one
   * fixed-width record per user, hash-partitioned by the key.
   */
-class InterarrivalProcessor
-  extends StatefulProcessor[Long, InterarrivalProcessor.Ev, InterarrivalProcessor.Gap] {
-  import InterarrivalProcessor._
-
-  @transient private var last: ValueState[LastTs] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    last = getHandle.getValueState[LastTs]("last",
-      Encoders.product[LastTs], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[Ev],
-      timerValues: TimerValues): Iterator[Gap] = {
-    val sorted = rows.toIndexedSeq.sortBy(e => (Streams.toUs(e.ts), e.event_id))
-    if (sorted.isEmpty) Iterator.empty
-    else {
-      var prev: LastTs = if (last.exists()) last.get() else null
-      val out = Vector.newBuilder[Gap]
-      sorted.foreach { e =>
-        val us = Streams.toUs(e.ts)
-        if (prev != null) out += Gap(key, us - prev.ts_us)
-        prev = LastTs(us, e.event_id)
-      }
-      last.update(prev)
-      out.result().iterator
-    }
-  }
-}
-
 object InterarrivalProcessor {
   case class Ev(user_id: Long, ts: java.sql.Timestamp, event_id: Long)
   case class LastTs(ts_us: Long, event_id: Long)
   case class Gap(user_id: Long, gap_us: Long)
+
+  private[streaming] def fold(key: Long, last: Option[LastTs],
+      rows: Iterator[Ev]): (Option[LastTs], Iterator[Gap]) = {
+    var prev: LastTs = last.orNull
+    val out = Vector.newBuilder[Gap]
+    rows.toIndexedSeq.sortBy(e => (Streams.toUs(e.ts), e.event_id)).foreach { e =>
+      val us = Streams.toUs(e.ts)
+      if (prev != null) out += Gap(key, us - prev.ts_us)
+      prev = LastTs(us, e.event_id)
+    }
+    (Some(prev), out.result().iterator)
+  }
 
   /** Incremental per-user inter-arrival gaps over an unbounded (or
     * replayed) event stream; bucket and histogram downstream exactly
     * like the batch ts_interarrival query. */
   def gapStream(events: DataFrame): Dataset[Gap] = {
     import events.sparkSession.implicits._
-    events.select(col("user_id"), col("ts"), col("event_id"))
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .transformWithState(new InterarrivalProcessor, TimeMode.None(), OutputMode.Append())
+    FoldProcessor.run(
+      events.select(col("user_id"), col("ts"), col("event_id"))
+        .as[Ev]
+        .groupByKey(_.user_id),
+      "last", Encoders.product[LastTs])(fold)
   }
 }

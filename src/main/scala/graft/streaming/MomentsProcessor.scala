@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
-import org.apache.spark.sql.streaming.ValueState
 
 /** Streaming per-series moment monitor — the streaming face of the
   * batch anomaly gauges (dq_anomaly_zscore derives mean/variance/z from
@@ -32,34 +30,6 @@ import org.apache.spark.sql.streaming.ValueState
   * Scale posture: state is three longs per series — bounded by the key
   * space, not the event count — hash-partitioned by series like any
   * keyed aggregation. */
-class MomentsProcessor
-  extends StatefulProcessor[String, MomentsProcessor.Ev, MomentsProcessor.Mom] {
-  import MomentsProcessor._
-
-  @transient private var st: ValueState[Mom] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Mom]("mom",
-      Encoders.product[Mom], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[Ev],
-      timerValues: TimerValues): Iterator[Mom] = {
-    var m: Mom = if (st.exists()) st.get() else Mom(key, 0L, 0L, 0L)
-    var seen = false
-    rows.foreach { e =>
-      seen = true
-      // exact-arith adds (r9 advice): the batch twin runs under ANSI and
-      // fails LOUDLY on overflow; plain Long + / * would wrap silently
-      // past the documented ~3e9 per-measurement bound and diverge
-      // quietly instead. Math.*Exact throws the same class of error.
-      m = Mom(key, Math.addExact(m.n, 1L), Math.addExact(m.s, e.x),
-        Math.addExact(m.ss, Math.multiplyExact(e.x, e.x)))
-    }
-    if (!seen) Iterator.empty
-    else { st.update(m); Iterator.single(m) }
-  }
-}
-
 object MomentsProcessor {
   case class Ev(series: String, x: Long)
 
@@ -68,15 +38,30 @@ object MomentsProcessor {
     * per series in an append sink is the current moment state. */
   case class Mom(series: String, n: Long, s: Long, ss: Long)
 
+  private[streaming] def fold(key: String, prior: Option[Mom],
+      rows: Iterator[Ev]): (Option[Mom], Iterator[Mom]) = {
+    var m: Mom = prior.getOrElse(Mom(key, 0L, 0L, 0L))
+    rows.foreach { e =>
+      // exact-arith adds (r9 advice): the batch twin runs under ANSI and
+      // fails LOUDLY on overflow; plain Long + / * would wrap silently
+      // past the documented ~3e9 per-measurement bound and diverge
+      // quietly instead. Math.*Exact throws the same class of error.
+      m = Mom(key, Math.addExact(m.n, 1L), Math.addExact(m.s, e.x),
+        Math.addExact(m.ss, Math.multiplyExact(e.x, e.x)))
+    }
+    (Some(m), Iterator.single(m))
+  }
+
   /** Incremental moment state over an unbounded (or replayed)
     * (series, x) stream. Works identically on a bounded batch
     * Dataset. */
   def momentsStream(rows: DataFrame): Dataset[Mom] = {
     import rows.sparkSession.implicits._
-    rows.select(col("series").cast("string").as("series"),
-        col("x").cast("long").as("x"))
-      .as[Ev]
-      .groupByKey(_.series)
-      .transformWithState(new MomentsProcessor, TimeMode.None(), OutputMode.Append())
+    FoldProcessor.run(
+      rows.select(col("series").cast("string").as("series"),
+          col("x").cast("long").as("x"))
+        .as[Ev]
+        .groupByKey(_.series),
+      "mom", Encoders.product[Mom])(fold)
   }
 }

@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
-import org.apache.spark.sql.streaming.ValueState
 
 /** Streaming incremental OHLC — the streaming face of the batch ts_ohlc
   * query (r5 verdict "missing" #3): keyed by (event_type, hour), one
@@ -26,34 +24,6 @@ import org.apache.spark.sql.streaming.ValueState
   * the grouping key like any keyed aggregation; RocksDB shards it with
   * the key space.
   */
-class OhlcProcessor
-  extends StatefulProcessor[(String, Long), OhlcProcessor.Ev, OhlcProcessor.Candle] {
-  import OhlcProcessor._
-
-  @transient private var st: ValueState[Candle] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Candle]("candle",
-      Encoders.product[Candle], TTLConfig.NONE)
-
-  override def handleInputRows(key: (String, Long), rows: Iterator[Ev],
-      timerValues: TimerValues): Iterator[Candle] = {
-    var c: Candle = if (st.exists()) st.get() else null
-    rows.foreach { e =>
-      val tUs = Streams.toUs(e.ts)
-      c =
-        if (c == null)
-          Candle(key._1, key._2, 1L,
-            tUs, e.event_id, e.value,
-            tUs, e.event_id, e.value,
-            e.value, e.value)
-        else merge(c, tUs, e)
-    }
-    if (c == null) Iterator.empty
-    else { st.update(c); Iterator.single(c) }
-  }
-}
-
 object OhlcProcessor {
   case class Ev(event_type: String, ts: java.sql.Timestamp, event_id: Long,
     value: Double)
@@ -64,6 +34,22 @@ object OhlcProcessor {
     o_ts_us: Long, o_id: Long, open: Double,
     c_ts_us: Long, c_id: Long, close: Double,
     low: Double, high: Double)
+
+  private[streaming] def fold(key: (String, Long), prior: Option[Candle],
+      rows: Iterator[Ev]): (Option[Candle], Iterator[Candle]) = {
+    var c: Candle = prior.orNull
+    rows.foreach { e =>
+      val tUs = Streams.toUs(e.ts)
+      c =
+        if (c == null)
+          Candle(key._1, key._2, 1L,
+            tUs, e.event_id, e.value,
+            tUs, e.event_id, e.value,
+            e.value, e.value)
+        else merge(c, tUs, e)
+    }
+    (Some(c), Iterator.single(c))
+  }
 
   /** Lexicographic (ts, event_id, value) — the batch query's struct
     * comparison, spelled out. */
@@ -89,9 +75,10 @@ object OhlcProcessor {
     * stream. Works identically on a bounded batch Dataset. */
   def ohlcStream(events: DataFrame): Dataset[Candle] = {
     import events.sparkSession.implicits._
-    events.select(col("event_type"), col("ts"), col("event_id"), col("value"))
-      .as[Ev]
-      .groupByKey(e => (e.event_type, Streams.toUs(e.ts) / hourUs * hourUs))
-      .transformWithState(new OhlcProcessor, TimeMode.None(), OutputMode.Append())
+    FoldProcessor.run(
+      events.select(col("event_type"), col("ts"), col("event_id"), col("value"))
+        .as[Ev]
+        .groupByKey(e => (e.event_type, Streams.toUs(e.ts) / hourUs * hourUs)),
+      "candle", Encoders.product[Candle])(fold)
   }
 }

@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
-import org.apache.spark.sql.streaming.ValueState
 
 /** Streaming deterministic sample reservoir — the incremental twin of
   * the batch salted-hash samplers (sample_interleave's per-source
@@ -26,29 +24,6 @@ import org.apache.spark.sql.streaming.ValueState
   * each batch is the <= k-row snapshot tagged with the running n_seen,
   * so an append-sink consumer keeps the max-n rows per source (the
   * HeavyHitterProcessor snapshot contract). */
-class ReservoirProcessor(k: Int)
-  extends StatefulProcessor[String, ReservoirProcessor.In, ReservoirProcessor.Out] {
-  import ReservoirProcessor._
-
-  @transient private var st: ValueState[Res] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Res]("res", Encoders.product[Res], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[In],
-      timerValues: TimerValues): Iterator[Out] = {
-    val prev: Res = if (st.exists()) st.get() else Res(Seq.empty, 0L)
-    var nSeen = prev.n
-    val incoming = rows.map { r => nSeen += 1; Entry(r.h, r.doc_id) }.toSeq
-    // min-k fold: distinct guards replay idempotence (a re-delivered
-    // doc_id carries the same hash, so it can never displace anything)
-    val kept = (prev.items ++ incoming).distinct
-      .sortBy(e => (e.h, e.doc_id)).take(k)
-    st.update(Res(kept, nSeen))
-    kept.iterator.map(e => Out(key, e.doc_id, e.h, nSeen))
-  }
-}
-
 object ReservoirProcessor {
   case class In(source: String, doc_id: Long, h: Long)
   private[streaming] case class Entry(h: Long, doc_id: Long)
@@ -59,14 +34,27 @@ object ReservoirProcessor {
     * sample. */
   case class Out(source: String, doc_id: Long, h: Long, n_seen: Long)
 
+  private[streaming] def fold(k: Int)(key: String, prior: Option[Res],
+      rows: Iterator[In]): (Option[Res], Iterator[Out]) = {
+    val prev: Res = prior.getOrElse(Res(Seq.empty, 0L))
+    var nSeen = prev.n
+    val incoming = rows.map { r => nSeen += 1; Entry(r.h, r.doc_id) }.toSeq
+    // min-k fold: distinct guards replay idempotence (a re-delivered
+    // doc_id carries the same hash, so it can never displace anything)
+    val kept = (prev.items ++ incoming).distinct
+      .sortBy(e => (e.h, e.doc_id)).take(k)
+    (Some(Res(kept, nSeen)), kept.iterator.map(e => Out(key, e.doc_id, e.h, nSeen)))
+  }
+
   /** Incremental per-source deterministic sample over a document
     * stream; the order key is the SHARED reservoirKey salted hash. */
   def reservoirStream(docs: DataFrame, k: Int): Dataset[Out] = {
     import docs.sparkSession.implicits._
-    docs.select(col("source"), col("doc_id"),
-        graft.queries.SampleQueries.reservoirKey(col("doc_id")).as("h"))
-      .as[In]
-      .groupByKey(_.source)
-      .transformWithState(new ReservoirProcessor(k), TimeMode.None(), OutputMode.Append())
+    FoldProcessor.run(
+      docs.select(col("source"), col("doc_id"),
+          graft.queries.SampleQueries.reservoirKey(col("doc_id")).as("h"))
+        .as[In]
+        .groupByKey(_.source),
+      "res", Encoders.product[Res])(fold(k))
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Streaming sequence-completeness monitor (r11, 18th processor) — the
   * incremental face of the batch dq_sequence_gaps census
@@ -29,51 +28,38 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * aggregates days (resolveDaily). The defect columns derive from the
   * emitted facts consumer-side (the FreshnessProcessor rule: a keyed
   * processor must not read cross-key state). */
-class SeqGapProcessor
-  extends StatefulProcessor[String, SeqGapProcessor.Ev, SeqGapProcessor.Cell] {
+object SeqGapProcessor {
+  case class Ev(day: Long, bucket: Long, event_id: Long)
+  /** One upsert row: key (day, bucket)'s state after this batch. */
+  case class Cell(day: Long, bucket: Long, bm: Long, cnt: Long, mn: Long, mx: Long)
 
-  @transient private var st: ValueState[(Long, Long, Long, Long)] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[(Long, Long, Long, Long)]("st",
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-        Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[SeqGapProcessor.Ev],
-      timerValues: TimerValues): Iterator[SeqGapProcessor.Cell] = {
-    var (bm, cnt, mn, mx) =
-      if (st.exists()) st.get() else (0L, 0L, Long.MaxValue, Long.MinValue)
+  private[streaming] def fold(key: String, prior: Option[(Long, Long, Long, Long)],
+      rows: Iterator[Ev]): (Option[(Long, Long, Long, Long)], Iterator[Cell]) = {
+    var (bm, cnt, mn, mx) = prior.getOrElse((0L, 0L, Long.MaxValue, Long.MinValue))
     var day = 0L
     var bucket = 0L
-    var any = false
     rows.foreach { e =>
-      day = e.day; bucket = e.bucket; any = true
+      day = e.day; bucket = e.bucket
       bm |= 1L << (e.event_id % 63L)
       cnt = Math.addExact(cnt, 1L)
       mn = math.min(mn, e.event_id)
       mx = math.max(mx, e.event_id)
     }
-    if (!any) return Iterator.empty
-    st.update((bm, cnt, mn, mx))
-    Iterator.single(SeqGapProcessor.Cell(day, bucket, bm, cnt, mn, mx))
+    (Some((bm, cnt, mn, mx)), Iterator.single(Cell(day, bucket, bm, cnt, mn, mx)))
   }
-}
-
-object SeqGapProcessor {
-  case class Ev(day: Long, bucket: Long, event_id: Long)
-  /** One upsert row: key (day, bucket)'s state after this batch. */
-  case class Cell(day: Long, bucket: Long, bm: Long, cnt: Long, mn: Long, mx: Long)
 
   /** Key an (event_id, ts) stream by (day, id DIV 63) — the same day
     * derivation as the batch census (epoch-µs integer floor division,
     * the dq_freshness rule). */
   def cellStream(ev: DataFrame): Dataset[Cell] = {
     import ev.sparkSession.implicits._
-    ev.selectExpr("unix_micros(ts) DIV 86400000000 AS day",
-        "event_id DIV 63 AS bucket", "event_id")
-      .as[Ev]
-      .groupByKey(e => e.day + "|" + e.bucket)
-      .transformWithState(new SeqGapProcessor, TimeMode.None(), OutputMode.Append())
+    FoldProcessor.run(
+      ev.selectExpr("unix_micros(ts) DIV 86400000000 AS day",
+          "event_id DIV 63 AS bucket", "event_id")
+        .as[Ev]
+        .groupByKey(e => s"${e.day}|${e.bucket}"),
+      "st", Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
+        Encoders.scalaLong, Encoders.scalaLong))(fold)
   }
 
   /** Resolve the upsert stream to the per-day census: commutative folds

@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
-import org.apache.spark.sql.streaming.ValueState
 
 /** Streaming per-group top-k — the incremental twin of the DECLARED
   * win_topk_per_group (top-3 customers per nation by (c_acctbal DESC,
@@ -29,30 +27,6 @@ import org.apache.spark.sql.streaming.ValueState
   * the ranked <= k-row snapshot tagged with the running n_seen, so an
   * append-sink consumer keeps the max-n rows per key (the
   * HeavyHitter/Reservoir snapshot contract). */
-class TopKProcessor(k: Int)
-  extends StatefulProcessor[Int, TopKProcessor.In, TopKProcessor.Out] {
-  import TopKProcessor._
-
-  @transient private var st: ValueState[Top] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Top]("top", Encoders.product[Top], TTLConfig.NONE)
-
-  override def handleInputRows(key: Int, rows: Iterator[In],
-      timerValues: TimerValues): Iterator[Out] = {
-    val prev: Top = if (st.exists()) st.get() else Top(Seq.empty, 0L)
-    var nSeen = prev.n
-    val incoming = rows.map { r => nSeen += 1; Item(r.c_acctbal, r.c_custkey, r.c_name) }.toSeq
-    val kept = (prev.items ++ incoming)
-      .groupBy(_.ck).valuesIterator.map(_.maxBy(e => (e.bal, e.name))).toSeq
-      .sortBy(e => (-e.bal, e.ck)).take(k)
-    st.update(Top(kept, nSeen))
-    kept.iterator.zipWithIndex.map { case (e, i) =>
-      Out(key, i + 1, e.ck, e.name, e.bal, nSeen)
-    }
-  }
-}
-
 object TopKProcessor {
   case class In(c_nationkey: Int, c_custkey: Long, c_name: String, c_acctbal: Double)
   private[streaming] case class Item(bal: Double, ck: Long, name: String)
@@ -63,13 +37,27 @@ object TopKProcessor {
   case class Out(c_nationkey: Int, rnk: Int, c_custkey: Long, c_name: String,
     c_acctbal: Double, n_seen: Long)
 
+  private[streaming] def fold(k: Int)(key: Int, prior: Option[Top],
+      rows: Iterator[In]): (Option[Top], Iterator[Out]) = {
+    val prev: Top = prior.getOrElse(Top(Seq.empty, 0L))
+    var nSeen = prev.n
+    val incoming = rows.map { r => nSeen += 1; Item(r.c_acctbal, r.c_custkey, r.c_name) }.toSeq
+    val kept = (prev.items ++ incoming)
+      .groupBy(_.ck).valuesIterator.map(_.maxBy(e => (e.bal, e.name))).toSeq
+      .sortBy(e => (-e.bal, e.ck)).take(k)
+    (Some(Top(kept, nSeen)), kept.iterator.zipWithIndex.map { case (e, i) =>
+      Out(key, i + 1, e.ck, e.name, e.bal, nSeen)
+    })
+  }
+
   /** Incremental per-nation top-k over a customer stream — the same
     * order key as the batch win_topk_per_group window. */
   def topkStream(customers: DataFrame, k: Int): Dataset[Out] = {
     import customers.sparkSession.implicits._
-    customers.select(col("c_nationkey"), col("c_custkey"), col("c_name"), col("c_acctbal"))
-      .as[In]
-      .groupByKey(_.c_nationkey)
-      .transformWithState(new TopKProcessor(k), TimeMode.None(), OutputMode.Append())
+    FoldProcessor.run(
+      customers.select(col("c_nationkey"), col("c_custkey"), col("c_name"), col("c_acctbal"))
+        .as[In]
+        .groupByKey(_.c_nationkey),
+      "top", Encoders.product[Top])(fold(k))
   }
 }

@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
-import org.apache.spark.sql.streaming.ValueState
 
 /** Streaming CDC upsert — the streaming face of the batch
   * cdc_merge_upsert query (the reference's actual job: scheduled
@@ -27,29 +25,6 @@ import org.apache.spark.sql.streaming.ValueState
   * hash-partitioned by the grouping key like any keyed aggregation
   * (RocksDB spills off-heap); each micro-batch touches only its own
   * keys' shards — the incremental-merge shape at any table size. */
-class UpsertProcessor
-  extends StatefulProcessor[Long, UpsertProcessor.Chg, UpsertProcessor.Cur] {
-  import UpsertProcessor._
-
-  @transient private var st: ValueState[Cur] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Cur]("cur", Encoders.product[Cur], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[Chg],
-      timerValues: TimerValues): Iterator[Cur] = {
-    var c: Cur = if (st.exists()) st.get() else Cur(key, -1L, 0L, alive = false)
-    rows.toSeq.sortBy(_.seq).foreach { ch =>
-      if (ch.seq > c.seq) c = ch.op match {
-        case "D" => Cur(key, ch.seq, 0L, alive = false)
-        case _   => Cur(key, ch.seq, ch.cents, alive = true) // I or U
-      }
-    }
-    st.update(c)
-    Iterator.single(c)
-  }
-}
-
 object UpsertProcessor {
   /** One CDC change: key, monotone per-key sequence, op (I/U/D), and the
     * new price in exact cents (ignored for D). */
@@ -58,12 +33,25 @@ object UpsertProcessor {
   /** Current-state fact: the latest applied change per key. */
   case class Cur(key: Long, seq: Long, cents: Long, alive: Boolean)
 
+  private[streaming] def fold(key: Long, prior: Option[Cur],
+      rows: Iterator[Chg]): (Option[Cur], Iterator[Cur]) = {
+    var c: Cur = prior.getOrElse(Cur(key, -1L, 0L, alive = false))
+    rows.toSeq.sortBy(_.seq).foreach { ch =>
+      if (ch.seq > c.seq) c = ch.op match {
+        case "D" => Cur(key, ch.seq, 0L, alive = false)
+        case _   => Cur(key, ch.seq, ch.cents, alive = true) // I or U
+      }
+    }
+    (Some(c), Iterator.single(c))
+  }
+
   /** Incremental keyed upsert over an unbounded (or replayed) change
     * stream. Works identically on a bounded batch Dataset. */
   def upsertStream(chg: DataFrame): Dataset[Cur] = {
     import chg.sparkSession.implicits._
-    chg.select(col("key"), col("seq"), col("op"), col("cents")).as[Chg]
-      .groupByKey(_.key)
-      .transformWithState(new UpsertProcessor, TimeMode.None(), OutputMode.Append())
+    FoldProcessor.run(
+      chg.select(col("key"), col("seq"), col("op"), col("cents")).as[Chg]
+        .groupByKey(_.key),
+      "cur", Encoders.product[Cur])(fold)
   }
 }

@@ -16,6 +16,7 @@ class PlanGuardSpec extends SparkSpec {
   import org.apache.spark.sql.catalyst.expressions.aggregate.{Partial, PartialMerge}
   import graft.tools.PlanAudit
   import graft.tools.PlanAudit.allNodes
+  import org.apache.spark.sql.graft.CacheProbe
 
   // join_cross is the deliberately-bounded 5x25 Cartesian demo.
   private val cartesianOk = Set("join_cross")
@@ -81,9 +82,15 @@ class PlanGuardSpec extends SparkSpec {
   }
 
   /** Every declared query planned once: its plan-audit row and its
-    * scale-safety offenders, both read off the same plan. */
-  private lazy val audit: Seq[(String, Seq[String])] =
+    * scale-safety offenders, both read off the same plan, and the
+    * cache-manager entries its build left behind (`plans` starts on an
+    * empty cache, so any growth is the query just built). */
+  private lazy val audit: Seq[(String, Seq[String], Option[String])] = {
+    var cached = 0
     PlanAudit.plans(spark, sf).map { case (name, planned) =>
+      val now = CacheProbe.entries(spark)
+      val leak = if (now > cached) Some(s"$name: cache-manager entries $cached -> $now") else None
+      cached = now
       val offenders = planned.toOption.toSeq.flatMap { qe =>
         val plan = qe.executedPlan
         val cart =
@@ -97,14 +104,23 @@ class PlanGuardSpec extends SparkSpec {
           singlePartitionExchanges(plan).filterNot(isBoundedScalarAggFeed)
             .map(e => s"$name: Exchange SinglePartition over [${e.child.nodeName}]")
       }
-      PlanAudit.row(name, planned.map(_.executedPlan)) -> offenders
+      (PlanAudit.row(name, planned.map(_.executedPlan)), offenders, leak)
     }.toList
+  }
 
   test("catalog-wide: no CartesianProduct, no unbounded single-partition " +
       "Exchange, hints on non-equi joins of checkpointed frames") {
     val offenders = audit.flatMap(_._2)
     assert(offenders.isEmpty,
       s"scale-unsafe constructs crept back into declared plans:\n${offenders.mkString("\n")}")
+  }
+
+  test("catalog-wide: building a declared query caches nothing") {
+    // a frame cached at build time is never unpersisted by anyone: it
+    // lives until the JVM exits and is swapped into every later plan
+    // that contains it
+    val leaks = audit.flatMap(_._3)
+    assert(leaks.isEmpty, s"declared queries left cached frames behind:\n${leaks.mkString("\n")}")
   }
 
   test("catalog-wide: every plan shape matches plan_audit.tsv") {
