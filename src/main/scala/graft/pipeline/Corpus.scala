@@ -20,7 +20,10 @@ import graft.queries.{SampleQueries, SimQueries, TextQueries}
   *
   * Scale posture: pair generation and clustering are the only multi-pass
   * stages (bounded by the LSH bucket joins and graph diameter); survivor
-  * selection is one aggregate; split assignment is map-side. The output
+  * selection is one aggregate; split assignment is map-side. A dedup
+  * graph within Scale.connectedComponents' localCap (2^18 mirrored edge
+  * rows) is clustered on the driver in zero rounds; a corpus-scale graph
+  * exceeds the cap and runs the distributed rounds. The output
   * is the training corpus manifest: survivors only, each with its
   * cluster id, quality score and split. */
 object Corpus {

@@ -383,7 +383,8 @@ object TextQueries {
     }),
 
     // Near-dup CLUSTERS from the MinHash pair graph: connected components
-    // via distributed min-label propagation (Scale.connectedComponents).
+    // via Scale.connectedComponents (a driver union-find while the graph
+    // fits its localCap, distributed min-label propagation above it).
     // Pairs alone can't drive dedup — keeping "one of each pair" drops a
     // doc once per partner; the component is the dedup unit (keep min id /
     // best quality per cluster). cluster_id = min doc_id in the component,
@@ -423,9 +424,11 @@ object TextQueries {
       s.conf.set("graft.materialize", "scratch")
       s.conf.set("graft.materialize.dir", ScanQueries.scratch("mat_cluster", d))
       val pairs = minhashStarEdges(s, d)
+      // localCap = 0: the rounds, not the driver path, are what this
+      // twin exists to land as scratch parquet
       val cc = graft.operators.Scale.connectedComponents(
         Tables.documents(s, d).select(col("doc_id").as("id")),
-        pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
+        pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")), localCap = 0)
       clusterEmit(cc)
     }),
 

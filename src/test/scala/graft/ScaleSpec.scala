@@ -187,11 +187,11 @@ class ScaleSpec extends SparkSpec {
   test("connectedComponents: chain, clique, and singleton components") {
     import spark.implicits._
     // chain 1-2-3-4 (diameter 3 — forces multiple propagation rounds),
-    // triangle 5-6-7, isolated node 10
+    // triangle 5-6-7, isolated node 10; localCap = 0 runs the rounds
     val nodes = Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 10L).toDF("id")
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L), (6L, 7L), (5L, 7L))
       .toDF("src", "dst")
-    val got = Scale.connectedComponents(nodes, edges)
+    val got = Scale.connectedComponents(nodes, edges, localCap = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       5L -> 5L, 6L -> 5L, 7L -> 5L, 10L -> 10L))
@@ -228,8 +228,9 @@ class ScaleSpec extends SparkSpec {
     assert(intercept[IllegalArgumentException] {
       Scale.materialize(s3.range(3).toDF())
     }.getMessage.contains("unknown mode"))
-    // (c) the reliable path: connectedComponents (whose every round runs
-    // through the seam) on the chain+clique+singleton graph from the
+    // (c) the reliable path: connectedComponents' distributed rounds
+    // (localCap = 0; every round runs through the seam, while the driver
+    // path would run none) on the chain+clique+singleton graph from the
     // test above, in the reliable-mode clone — identical labels, and the
     // checkpoint dir actually received RDD checkpoint data
     val dir = java.nio.file.Files.createTempDirectory("graft_reliable_ckp")
@@ -239,7 +240,7 @@ class ScaleSpec extends SparkSpec {
       .toDF("src", "dst")
     val sn = s2.createDataFrame(Seq(Tuple1(1L), Tuple1(2L), Tuple1(3L),
       Tuple1(4L), Tuple1(5L), Tuple1(6L), Tuple1(7L), Tuple1(10L))).toDF("id")
-    val got = Scale.connectedComponents(sn, se)
+    val got = Scale.connectedComponents(sn, se, localCap = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       5L -> 5L, 6L -> 5L, 7L -> 5L, 10L -> 10L))
@@ -297,13 +298,67 @@ class ScaleSpec extends SparkSpec {
   test("connectedComponents: long chain converges (worst-case diameter)") {
     // 64-node path graph: min-label propagation needs ~diameter rounds;
     // proves the convergence loop actually iterates far past the
-    // near-clique LSH regime without tripping the maxIter guard.
+    // near-clique LSH regime without tripping the maxIter guard — and
+    // that the guard trips, loudly, when the rounds run out first
+    // (localCap = 0 runs the rounds; the driver path has none).
     import spark.implicits._
     val n = 64
     val nodes = (1L to n.toLong).toDF("id")
     val edges = (1L until n.toLong).map(i => (i, i + 1)).toDF("src", "dst")
-    val got = Scale.connectedComponents(nodes, edges, maxIter = n + 2)
+    val got = Scale.connectedComponents(nodes, edges, maxIter = n + 2, localCap = 0)
     assert(got.where(col("cluster") === 1L).count() === n.toLong)
+    val ex = intercept[IllegalStateException] {
+      Scale.connectedComponents(nodes, edges, maxIter = 3, localCap = 0)
+    }
+    assert(ex.getMessage.contains("did not converge in 3 rounds"))
+  }
+
+  test("connectedComponents: driver path equals the rounds and connectedComponentsStar (seeded random graphs)") {
+    // The driver union-find must give the rounds' rows on inputs the
+    // caller contract leaves open: a null and a duplicated node id,
+    // self-loops, a duplicate edge, null endpoints, and endpoints outside
+    // `nodes` (5 and 9 bridged only through one — they must not merge).
+    // connectedComponentsStar runs on the graph those cases reduce to:
+    // distinct non-null ids, edges with both endpoints in the node set.
+    import spark.implicits._
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    def check(ids: Seq[Option[Long]], es: Seq[(Option[Long], Option[Long])]): Unit = {
+      val nodes = ids.toDF("id")
+      val edges = es.toDF("src", "dst")
+      val local = Scale.connectedComponents(nodes, edges)
+      val dist = Scale.connectedComponents(nodes, edges, localCap = 0)
+      assert(local.isLocal && !dist.isLocal, "the two calls must take different paths")
+      val inSet = ids.flatten.toSet
+      val star = Scale.connectedComponentsStar(inSet.toSeq.toDF("id"),
+        es.collect { case (Some(a), Some(b)) if inSet(a) && inSet(b) => (a, b) }
+          .toDF("src", "dst"))
+      val want = rows(star)
+      assert(want.map(_._1) === inSet.toSeq.sorted)
+      assert(rows(local) === want, s"driver path vs star: $es")
+      assert(rows(dist) === want, s"rounds vs star: $es")
+    }
+    val n = 40
+    val ids = (0L until n).map(Option(_)) ++ Seq(None, Some(7L))
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      val random = Seq.fill(30)((Option(rnd.nextInt(n).toLong), Option(rnd.nextInt(n).toLong)))
+      check(ids, random ++ Seq(random.head, (Some(3L), Some(3L)),
+        (Some(5L), Some(n + 10L)), (Some(n + 10L), Some(9L)),
+        (None, Some(4L)), (Some(6L), None)))
+    }
+    check(ids, Seq.empty)
+    // the cap boundary counts mirrored edge rows (two per input edge) and
+    // node rows: 3 edges are 6 rows, so 6 stays local and 5 falls back;
+    // with 8 node rows a cap of 7 falls back on the node collect alone
+    val chain = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("src", "dst")
+    val six = (1L to 6L).toDF("id")
+    val atCap = Scale.connectedComponents(six, chain, localCap = 6)
+    val overCap = Scale.connectedComponents(six, chain, localCap = 5)
+    assert(atCap.isLocal && !overCap.isLocal)
+    assert(rows(atCap) === rows(overCap))
+    assert(rows(atCap) === Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 4L), (6L, 6L)))
+    assert(!Scale.connectedComponents((1L to 8L).toDF("id"), chain, localCap = 7).isLocal)
   }
 
   test("connectedComponentsStar equals min-label propagation (seeded random graph)") {
@@ -314,7 +369,7 @@ class ScaleSpec extends SparkSpec {
       pmod(xxhash64(col("id"), lit(1)), lit(n)).as("src"),
       pmod(xxhash64(col("id"), lit(2)), lit(n)).as("dst"))
       .where(col("src") =!= col("dst"))
-    val a = Scale.connectedComponents(nodes, edges)
+    val a = Scale.connectedComponents(nodes, edges, localCap = 0)
     val b = Scale.connectedComponentsStar(nodes, edges)
     assert(a.except(b).count() === 0 && b.except(a).count() === 0)
   }
