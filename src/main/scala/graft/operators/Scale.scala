@@ -174,7 +174,7 @@ object Scale {
     * internal ("__lx"/"__ly" carry the cell id). */
   def lanedBucketJoin(left: DataFrame, right: DataFrame,
       keys: Seq[String], leftId: String, rightId: String,
-      lanes: Int = 8, hotMin: Int = 65): DataFrame = {
+      lanes: Int = 8, hotMin: Int = 65, hotCap: Int = 1 << 20): DataFrame = {
     val kcols = keys.map(col)
     // per-side bucket sizes; for a self-join (same DataFrame object both
     // sides) one aggregate serves both. FULL outer: a bucket huge on one
@@ -195,8 +195,8 @@ object Scale {
     // n_bucket_rows/hotMin — realistic LSH histograms keep it tiny, but an
     // adversarial distribution (millions of just-hot buckets) would OOM
     // the driver through the broadcast. Guard: collect at most hotCap + 1
-    // hot keys (one job, nothing persisted); above graft.lanedJoin.hotCap
-    // (default 2^20 keys — a few tens of MB broadcast at worst), fall back
+    // hot keys (one job, nothing persisted); above `hotCap` (default
+    // 2^20 keys — a few tens of MB broadcast at worst), fall back
     // to UNIFORM laning for every bucket (the pre-r15 shape): graceful
     // lanes-fold replication instead of a fatal broadcast. Output is
     // row-identical on EVERY path (a pair meets in exactly one lane cell
@@ -204,7 +204,6 @@ object Scale {
     // efficiency knob — PropertySpec pins the fallback path on a planted
     // many-hot-buckets frame.
     val spark = left.sparkSession
-    val hotCap = spark.conf.get("graft.lanedJoin.hotCap", (1 << 20).toString).toInt
     val hotRows = hotRaw.limit(hotCap + 1).collect()
     val lanesArr = array((0 until lanes).map(lit): _*)
     val one = array(lit(0))
@@ -342,12 +341,11 @@ object Scale {
     * can keep one survivor per component instead of dropping both ends of
     * every pair.
     *
-    * `nodes`: one column `id`, ids unique (the keyed round aggregate
-    * collapses a duplicate id into one output row, and a null id yields
-    * none); `edges`: columns `src`,`dst` (undirected, given once —
-    * mirrored internally; an edge with a null endpoint or an endpoint
-    * outside `nodes` joins nothing). Returns (`id`, `cluster`) where
-    * `cluster` is the component's minimum id — deterministic, so it
+    * `nodes`: one column `id`; `edges`: columns `src`,`dst` (undirected,
+    * given once — mirrored internally). Both paths label the distinct
+    * non-null ids of `nodes`, and an edge with a null endpoint or an
+    * endpoint outside `nodes` joins nothing. Returns (`id`, `cluster`)
+    * where `cluster` is the component's minimum id — deterministic, so it
     * oracle-checks against a transitive-closure recursive CTE.
     *
     * Two paths with one result, picked by size the way AQE's broadcast
@@ -359,19 +357,17 @@ object Scale {
     *    union-find labels every node, and the result is a local relation.
     *    Zero rounds: in traced `corpus_dedup` (400 documents) a call
     *    went from 29 Spark jobs to 5.
-    *  - Distributed min-label propagation (everything else, and always
-    *    when `localCap <= 0`, which also skips the probe): each round
-    *    every node takes the min label over itself and its neighbors, so
-    *    it converges in O(graph diameter) rounds. LSH cluster graphs are
-    *    near-cliques (every member pair tends to collide in some band),
-    *    so 2-3 rounds suffice in practice; for adversarial / unknown
-    *    topology use [[connectedComponentsStar]], the O(log n)
-    *    large-star/small-star alternation (proven equivalent in
-    *    ScaleSpec). Every round is shuffle-on-key (join + groupBy on node
-    *    id), nothing driver-sided but the bounded convergence counter;
-    *    per-round materialization truncates the otherwise-exponential
-    *    lineage (same rationale as globalRank; blocks accrete one label
-    *    table per round, bounded by maxIter).
+    *  - Distributed (everything else, and always when `localCap <= 0`,
+    *    which also skips the probe): alternating large-star/small-star
+    *    edge rewriting (Kiveris et al., "Connected Components in
+    *    MapReduce and Beyond", SoCC 2014), which converges in O(log n)
+    *    rounds on any topology — a 64-node chain within 12 — where
+    *    min-label propagation needs O(diameter). Every round is
+    *    groupBy-on-node-id aggregates and joins (shuffle-on-key), nothing
+    *    driver-sided but a bounded fixpoint fingerprint; per-round
+    *    materialization truncates the otherwise-exponential lineage (same
+    *    rationale as globalRank; blocks accrete one edge table per round,
+    *    bounded by maxIter).
     *
     * The default cap, 2^18 = 262,144 mirrored edge rows (131,072 input
     * edges), is a driver-memory bound: a collected (u, v) row is ~90 B
@@ -382,9 +378,9 @@ object Scale {
     * array (3 MB), and the result relation about as much as the edge
     * collect. At 100 TB the edge set is far above the cap: the probe
     * reads at most `localCap + 1` rows of the already-checkpointed edge
-    * frame, and the rounds then run unchanged on that same frame. The
-    * driver path takes LongType ids (every in-repo caller); any other id
-    * type runs the rounds.
+    * frame, and the rounds then run on that same frame. The driver path
+    * takes LongType ids (every in-repo caller); any other id type runs
+    * the rounds.
     *
     * `maxIter` bounds the distributed rounds only (the driver path has
     * none): the loop fails loudly if not converged within it — a silent
@@ -393,50 +389,7 @@ object Scale {
       maxIter: Int = 50, localCap: Int = 1 << 18): DataFrame = {
     val e = materialize(edges.select(col("src").as("u"), col("dst").as("v"))
       .union(edges.select(col("dst").as("u"), col("src").as("v"))))
-    localComponents(nodes, e, localCap).getOrElse(minLabelRounds(nodes, e, maxIter))
-  }
-
-  /** The distributed path of [[connectedComponents]]: min-label rounds
-    * over its mirrored edge frame `e` (`u`, `v`). */
-  private def minLabelRounds(nodes: DataFrame, e: DataFrame,
-      maxIter: Int): DataFrame = {
-    var labels = materialize(nodes.select(col("id"), col("id").as("lbl")))
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIter) {
-      // r16 round shape (guide §2.4 — one exchange fewer per round, one
-      // join fewer): the old round aggregated neighbor mins per u
-      // (shuffle 1+2: edge⋈labels), re-shuffled the aggregate (3), then
-      // LEFT-joined it back onto labels (4, plus a second SMJ). The min
-      // over {self label} ∪ {neighbor labels} is ONE union + ONE keyed
-      // aggregate instead: self rows carry (id, lbl, self=true), the
-      // edge⋈labels contributions carry (u, neighbor's lbl, self=false),
-      // and min(val) per id IS nxt while min(val where self) recovers
-      // the old lbl for the convergence count — same exact integer mins,
-      // so every round's label table (and the final clusters) is
-      // bit-identical to the old shape (ScaleSpec's chain/clique/random
-      // pins cover it). The isNotNull filter keeps the output row set =
-      // nodes exactly, as the old left-join did for edge endpoints
-      // outside the node set (the caller contract either way).
-      val contrib = e.join(labels, e("v") === labels("id"))
-        .select(e("u").as("id"), labels("lbl").as("val"),
-          lit(false).as("self"))
-      val m = materialize(
-        labels.select(col("id"), col("lbl").as("val"), lit(true).as("self"))
-          .union(contrib)
-          .groupBy(col("id"))
-          .agg(min(when(col("self"), col("val"))).as("lbl"),
-            min(col("val")).as("nxt"))
-          .where(col("lbl").isNotNull))
-      // scalar count over the checkpointed round — bounded driver work
-      changed = m.where(col("nxt") =!= col("lbl")).count()
-      labels = m.select(col("id"), col("nxt").as("lbl"))
-      iter += 1
-    }
-    if (changed > 0) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter rounds " +
-        "(long-chain graph? switch to large-star/small-star)")
-    labels.withColumnRenamed("lbl", "cluster")
+    localComponents(nodes, e, localCap).getOrElse(starRounds(nodes, e, maxIter))
   }
 
   /** The driver path of [[connectedComponents]] over its mirrored edge
@@ -476,26 +429,18 @@ object Scale {
       new StructType().add("id", LongType).add("cluster", LongType)))
   }
 
-  /** Connected components by alternating large-star/small-star edge
-    * rewriting (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond" — public algorithm): converges in O(log n) rounds on ANY
-    * graph, vs min-label propagation's O(diameter). Same contract as
-    * [[connectedComponents]] (nodes `id`; undirected edges `src`,`dst`;
-    * returns (`id`, `cluster`) with cluster = component min) and proven
-    * equivalent on shared tests (ScaleSpec). Use THIS for adversarial /
-    * unknown topology (long chains); min-label for near-clique LSH
-    * graphs, where 2-3 rounds beat the star rounds' constant factor.
+  /** The distributed path of [[connectedComponents]]: large-star/small-star
+    * rounds over its mirrored edge frame `e` (`u`, `v`).
     *
     *  - large-star: every node links its LARGER neighbors to the minimum
     *    of its neighborhood (incl. itself) — halves long tails;
     *  - small-star: edges canonicalized child>parent, every node links
     *    all smaller neighbors (and itself) to the neighborhood minimum.
     *
-    * Both steps are groupBy-on-node-id aggregates + joins (shuffle-on-key,
-    * fully distributed); the fixpoint check compares the canonical edge
-    * set via a bounded (count, xor-of-hashes) scalar aggregate. */
-  def connectedComponentsStar(nodes: DataFrame, edges: DataFrame,
-      maxIter: Int = 50): DataFrame = {
+    * The fixpoint check compares the canonical edge set via a bounded
+    * (count, xor-of-hashes) scalar aggregate. */
+  private def starRounds(nodes: DataFrame, e: DataFrame,
+      maxIter: Int): DataFrame = {
     def canon(e: DataFrame): DataFrame =
       e.where(col("src") =!= col("dst"))
         .select(greatest(col("src"), col("dst")).as("src"),
@@ -525,24 +470,30 @@ object Scale {
         coalesce(expr("bit_xor(xxhash64(src, dst))"), lit(0L)).as("x")).head()
       (r.getLong(0), r.getLong(1))
     }
-    var e = materialize(canon(edges))
-    var fp = fingerprint(e)
+    // the labelled set is the distinct non-null ids, and only edges with
+    // both endpoints in it take part — an outside vertex bridges nothing
+    val ids = nodes.select(col("id")).where(col("id").isNotNull).distinct()
+    var g = materialize(canon(e
+      .join(ids.select(col("id").as("u")), Seq("u"), "left_semi")
+      .join(ids.select(col("id").as("v")), Seq("v"), "left_semi")
+      .select(col("u").as("src"), col("v").as("dst"))))
+    var fp = fingerprint(g)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      val next = materialize(canon(smallStar(largeStar(e))))
+      val next = materialize(canon(smallStar(largeStar(g))))
       val nfp = fingerprint(next)
       converged = nfp == fp
-      e = next; fp = nfp; iter += 1
+      g = next; fp = nfp; iter += 1
     }
     if (!converged) throw new IllegalStateException(
-      s"connectedComponentsStar did not converge in $maxIter rounds")
+      s"connectedComponents did not converge in $maxIter rounds")
     // converged state is a union of stars rooted at each component's min:
     // every non-root appears as src with its root as dst; roots and
     // singletons label themselves
-    nodes.join(e.groupBy("src").agg(min(col("dst")).as("__root")),
-        nodes("id") === col("src"), "left")
-      .select(nodes("id"), coalesce(col("__root"), nodes("id")).as("cluster"))
+    ids.join(g.groupBy("src").agg(min(col("dst")).as("__root")),
+        ids("id") === col("src"), "left")
+      .select(ids("id"), coalesce(col("__root"), ids("id")).as("cluster"))
   }
 
   /** Incremental connected components by COMPONENT CONTRACTION (r10):
@@ -628,7 +579,7 @@ object Scale {
       }
     }
     incrementalFromLabels(allNodes,
-      materialize(connectedComponentsStar(baseNodes, baseEdges)),
+      materialize(connectedComponents(baseNodes, baseEdges)),
       deltaEdges)
   }
 
@@ -667,7 +618,7 @@ object Scale {
           allNodes("id") === col("__b"), "left_anti")
         .select(col("id")))
       .distinct()
-    val cc2 = materialize(connectedComponentsStar(contracted, mapped))
+    val cc2 = materialize(connectedComponents(contracted, mapped))
     allNodes
       .join(baseLabels.select(col("id"), col("cluster").as("l1")), Seq("id"), "left")
       .select(col("id"), coalesce(col("l1"), col("id")).as("l1"))

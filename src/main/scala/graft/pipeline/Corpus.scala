@@ -19,11 +19,11 @@ import graft.queries.{SampleQueries, SimQueries, TextQueries}
   *                              80/10/10, leakage-safe under rebuilds)
   *
   * Scale posture: pair generation and clustering are the only multi-pass
-  * stages (bounded by the LSH bucket joins and graph diameter); survivor
+  * stages (bounded by the LSH bucket joins and O(log n) CC rounds); survivor
   * selection is one aggregate; split assignment is map-side. A dedup
   * graph within Scale.connectedComponents' localCap (2^18 mirrored edge
   * rows) is clustered on the driver in zero rounds; a corpus-scale graph
-  * exceeds the cap and runs the distributed rounds. The output
+  * exceeds the cap and runs the large-star/small-star rounds. The output
   * is the training corpus manifest: survivors only, each with its
   * cluster id, quality score and split. */
 object Corpus {

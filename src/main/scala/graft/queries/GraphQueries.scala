@@ -267,20 +267,17 @@ object GraphQueries {
     // it censuses the co-purchase graph's component structure): nodes =
     // all basketed parts (singletons count), edges = the SHARED
     // supportedPairs frame (one pair/threshold definition with affinity
-    // and triangles). Components via Scale.connectedComponentsStar (r10,
-    // r9 verdict ask #4): the Kiveris large-star/small-star alternation
-    // that converges in O(log n) rounds on ANY topology — a co-purchase
-    // graph, unlike the near-clique LSH graphs the min-label loop is
-    // tuned for, has no diameter guarantee, so this is exactly where the
-    // adversarial-topology path belongs; cluster = component min on both
-    // paths, so the declared output (the component-SIZE histogram — the
-    // number that says whether the graph is one giant component or
-    // fragments) is identical, ScaleSpec-proven. Oracle: the same
+    // and triangles). Scale.connectedComponents labels a graph within
+    // its localCap on the driver and runs the O(log n) large-star/
+    // small-star rounds above it, so a co-purchase graph's missing
+    // diameter bound costs no extra rounds; the declared output is the
+    // component-SIZE histogram (the number that says whether the graph
+    // is one giant component or fragments). Oracle: the same
     // recursive-closure shape as dedup_cluster_cc over the mirrored
     // basketCteSql pair set.
     "graph_components" -> ((s, d) => {
       val p = basketItems(s, d)
-      val cc = graft.operators.Scale.connectedComponentsStar(
+      val cc = graft.operators.Scale.connectedComponents(
         p.select(col("pk").as("id")).distinct(),
         supportedPairs(p).select(col("p1").as("src"), col("p2").as("dst")))
       cc.groupBy("cluster").agg(count(lit(1)).as("csize"))
@@ -638,8 +635,8 @@ object GraphQueries {
   val oracle: Map[String, String] = Map(
     "graph_components" ->
       // the dedup_cluster_cc recursive-closure shape over the shared
-      // basket pair CTEs; set-semantics UNION converges; min-label ==
-      // Scale.connectedComponents' min propagation
+      // basket pair CTEs; set-semantics UNION converges; the per-node
+      // MIN(r) is Scale.connectedComponents' component-min cluster id
       (s"WITH RECURSIVE $basketCteSql, " +
        "e AS (SELECT p1 AS u, p2 AS v FROM pr UNION ALL SELECT p2, p1 FROM pr), " +
        "nodes AS (SELECT DISTINCT pk AS id FROM p), " +

@@ -370,7 +370,7 @@ object TextQueries {
       val (buckets, flags) = deltaSplitFrames(s, d)
       // "yesterday": label the base graph and PERSIST the label table
       val labelPath = ScanQueries.scratch("cluster_labels", d)
-      graft.operators.Scale.connectedComponentsStar(
+      graft.operators.Scale.connectedComponents(
           flags.where(!col("is_delta")).select(col("doc_id").as("id")),
           minhashStarEdgesOver(buckets.where(!col("is_delta")))
             .select(col("doc_a").as("src"), col("doc_b").as("dst")))
@@ -384,19 +384,18 @@ object TextQueries {
 
     // Near-dup CLUSTERS from the MinHash pair graph: connected components
     // via Scale.connectedComponents (a driver union-find while the graph
-    // fits its localCap, distributed min-label propagation above it).
-    // Pairs alone can't drive dedup — keeping "one of each pair" drops a
-    // doc once per partner; the component is the dedup unit (keep min id /
-    // best quality per cluster). cluster_id = min doc_id in the component,
-    // so the whole assignment is deterministic and oracle-checked against
-    // a DuckDB transitive-closure recursive CTE. Singletons cluster as
-    // themselves (csize 1). 100 TB shape: edges come from the banded-LSH
-    // equality join via STAR reduction (min-doc -> member per bucket —
-    // Σ|b| edges, never the Σ|b|²/2 all-pairs emission; components are
-    // provably identical, see minhashStarEdges) and every propagation
-    // round is a shuffle-on-node-id join; rounds ~ diameter (star-edge
-    // LSH components converge in 2-3 — every member is one hop from the
-    // bucket center).
+    // fits its localCap, distributed large-star/small-star rounds above
+    // it). Pairs alone can't drive dedup — keeping "one of each pair"
+    // drops a doc once per partner; the component is the dedup unit (keep
+    // min id / best quality per cluster). cluster_id = min doc_id in the
+    // component, so the whole assignment is deterministic and
+    // oracle-checked against a DuckDB transitive-closure recursive CTE.
+    // Singletons cluster as themselves (csize 1). 100 TB shape: edges
+    // come from the banded-LSH equality join via STAR reduction (min-doc
+    // -> member per bucket — Σ|b| edges, never the Σ|b|²/2 all-pairs
+    // emission; components are provably identical, see minhashStarEdges)
+    // and every round is shuffle-on-node-id aggregates and joins,
+    // O(log n) rounds on any topology.
     "dedup_cluster_cc" -> ((s, d) => {
       val pairs = minhashStarEdges(s, d)
       val cc = graft.operators.Scale.connectedComponents(
@@ -407,8 +406,8 @@ object TextQueries {
 
     // The SEAM-IN-CONTRACT twin (r14): byte-identical clustering logic
     // to dedup_cluster_cc, executed under graft.materialize=scratch in
-    // a newSession clone — the edge build and EVERY CC propagation
-    // round land as durable scratch parquet and read back (measured
+    // a newSession clone — the edge build and EVERY CC round land as
+    // durable scratch parquet and read back (measured
     // stats, survives executor loss) instead of executor-local
     // localCheckpoint blocks. This is the r14 materialize seam's
     // cluster deployment mode running inside the ORACLED contract:
@@ -1161,7 +1160,7 @@ object TextQueries {
 
   /** Transitive closure over the SAME pair SQL: reach(doc, r) holds every
     * (node, component-member) pair, so MIN(r) per doc is exactly the
-    * min-label fixpoint the Spark propagation loop computes. */
+    * component-min cluster id Scale.connectedComponents returns. */
   private def clusterOracleSql: String =
     s"WITH RECURSIVE pairs AS ($minhashPairsSql), " +
       "e AS (SELECT doc_a AS u, doc_b AS v FROM pairs " +

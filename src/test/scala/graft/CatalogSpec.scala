@@ -148,7 +148,7 @@ class CatalogSpec extends SparkSpec {
     // r11: the persisted-label resume (label table landed + read back +
     // contraction-only) must produce the EXACT clustering of the
     // in-plan incremental query — same watermark, same star edges, same
-    // min-label identity; both already oracle against the full-rescan
+    // component-min identity; both already oracle against the full-rescan
     // closure, so this pin closes the triangle (persisted == in-plan ==
     // full rescan).
     def rows(q: String) = SparkEntry.queries(q)(spark, sf).collect()
@@ -159,7 +159,7 @@ class CatalogSpec extends SparkSpec {
   test("dedup_cluster_scratch equals dedup_cluster_cc cell-for-cell (r14 seam mode equivalence)") {
     // Both oracle against the same full-rescan closure, so this pin
     // closes the triangle for the materialize seam: scratch-parquet
-    // rounds == localCheckpoint rounds == full rescan. A divergence
+    // star rounds == driver union-find == full rescan. A divergence
     // here would mean the materialization MODE leaked into results —
     // the one property the seam must never break.
     def rows(q: String) = SparkEntry.queries(q)(spark, sf).collect()

@@ -165,16 +165,16 @@ class PipelineSpec extends SparkSpec {
     assert(corpus.count() <= textOnly.count())
 
     // independent recompute of the survivor set: union the two DECLARED
-    // (oracled) pair queries, cluster with the OTHER CC algorithm
-    // (large-star/small-star instead of min-label propagation), pick
-    // survivors with a window argmax instead of the min-struct aggregate —
-    // every component differs, the result may not.
+    // (oracled) pair queries, cluster with the OTHER CC path
+    // (localCap = 0: large-star/small-star rounds instead of the driver
+    // union-find), pick survivors with a window argmax instead of the
+    // min-struct aggregate — every component differs, the result may not.
     val textPairs = SparkEntry.queries("text_minhash_lsh")(spark, sf)
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
     val embPairs = SparkEntry.queries("dedup_embed_lsh")(spark, sf)
       .select(col("vec_a").as("src"), col("vec_b").as("dst"))
-    val cc = graft.operators.Scale.connectedComponentsStar(
-      docs.select(col("doc_id").as("id")), textPairs.union(embPairs))
+    val cc = graft.operators.Scale.connectedComponents(
+      docs.select(col("doc_id").as("id")), textPairs.union(embPairs), localCap = 0)
     val (_, _, _, _, _, score) = graft.queries.Text2Queries.qualityCols(col("text"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("cluster").orderBy(col("q").desc, col("id"))

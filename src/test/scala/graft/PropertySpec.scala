@@ -2002,9 +2002,9 @@ class PropertySpec extends SparkSpec {
 
   test("lanedBucketJoin: hot-set cap falls back to UNIFORM laning, row-identical (r16)") {
     // r16 (r15 verdict "What's wrong" #2): with more hot buckets than
-    // graft.lanedJoin.hotCap, the guarded path must NOT build the hot-set
-    // broadcast — it falls back to the pre-r15 uniform laning, which is
-    // graceful (lanes-fold replication) instead of fatal (driver OOM).
+    // `hotCap`, the guarded path must NOT build the hot-set broadcast —
+    // it falls back to the pre-r15 uniform laning, which is graceful
+    // (lanes-fold replication) instead of fatal (driver OOM).
     // Output stays row-identical on every path: plant many hot buckets
     // plus one cold bucket, cap below the hot count, and require exactly
     // the plain join's pairs — with even the COLD bucket's pairs spread
@@ -2018,22 +2018,19 @@ class PropertySpec extends SparkSpec {
         col("x.bk") === col("y.bk") && col("x.id") < col("y.id"))
       .select(col("x.id").as("a"), col("y.id").as("b"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("graft.lanedJoin.hotCap", "2")
-    try {
-      val laned = Scale.lanedBucketJoin(df, df, Seq("bk"), "id", "id", 8)
-        .where(col("x.id") < col("y.id"))
-        .select(col("x.id").as("a"), col("y.id").as("b"),
-          col("x.__lx"), col("x.__ly"))
-        .collect()
-      val pairs = laned.map(r => (r.getLong(0), r.getLong(1)))
-      assert(pairs.length === pairs.toSet.size,
-        "a pair meets in exactly ONE lane cell — no double emission")
-      assert(pairs.toSet === plain, "fallback must be row-identical to the plain join")
-      val coldCells = laned.filter(_.getLong(0) >= 9000L)
-        .map(r => (r.getInt(2), r.getInt(3))).distinct
-      assert(coldCells.length > 1,
-        "under the cap fallback even cold buckets lane (uniform path ran)")
-    } finally spark.conf.unset("graft.lanedJoin.hotCap")
+    val laned = Scale.lanedBucketJoin(df, df, Seq("bk"), "id", "id", 8, hotCap = 2)
+      .where(col("x.id") < col("y.id"))
+      .select(col("x.id").as("a"), col("y.id").as("b"),
+        col("x.__lx"), col("x.__ly"))
+      .collect()
+    val pairs = laned.map(r => (r.getLong(0), r.getLong(1)))
+    assert(pairs.length === pairs.toSet.size,
+      "a pair meets in exactly ONE lane cell — no double emission")
+    assert(pairs.toSet === plain, "fallback must be row-identical to the plain join")
+    val coldCells = laned.filter(_.getLong(0) >= 9000L)
+      .map(r => (r.getInt(2), r.getInt(3))).distinct
+    assert(coldCells.length > 1,
+      "under the cap fallback even cold buckets lane (uniform path ran)")
   }
 
   test("fixture properties the native-kernel corner arms rely on (r15 verdict #3)") {

@@ -186,7 +186,7 @@ class ScaleSpec extends SparkSpec {
 
   test("connectedComponents: chain, clique, and singleton components") {
     import spark.implicits._
-    // chain 1-2-3-4 (diameter 3 — forces multiple propagation rounds),
+    // chain 1-2-3-4 (diameter 3 — forces multiple rounds),
     // triangle 5-6-7, isolated node 10; localCap = 0 runs the rounds
     val nodes = Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 10L).toDF("id")
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L), (6L, 7L), (5L, 7L))
@@ -296,16 +296,16 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("connectedComponents: long chain converges (worst-case diameter)") {
-    // 64-node path graph: min-label propagation needs ~diameter rounds;
-    // proves the convergence loop actually iterates far past the
-    // near-clique LSH regime without tripping the maxIter guard — and
-    // that the guard trips, loudly, when the rounds run out first
+    // 64-node path graph: min-label propagation would need ~64 rounds;
+    // the large-star/small-star rounds must finish in ~log2(64)+c —
+    // maxIter = 12 fails loudly if the algorithm degrades to linear —
+    // and the guard must trip, loudly, when the rounds run out first
     // (localCap = 0 runs the rounds; the driver path has none).
     import spark.implicits._
     val n = 64
     val nodes = (1L to n.toLong).toDF("id")
     val edges = (1L until n.toLong).map(i => (i, i + 1)).toDF("src", "dst")
-    val got = Scale.connectedComponents(nodes, edges, maxIter = n + 2, localCap = 0)
+    val got = Scale.connectedComponents(nodes, edges, maxIter = 12, localCap = 0)
     assert(got.where(col("cluster") === 1L).count() === n.toLong)
     val ex = intercept[IllegalStateException] {
       Scale.connectedComponents(nodes, edges, maxIter = 3, localCap = 0)
@@ -313,12 +313,12 @@ class ScaleSpec extends SparkSpec {
     assert(ex.getMessage.contains("did not converge in 3 rounds"))
   }
 
-  test("connectedComponents: driver path equals the rounds and connectedComponentsStar (seeded random graphs)") {
-    // The driver union-find must give the rounds' rows on inputs the
-    // caller contract leaves open: a null and a duplicated node id,
-    // self-loops, a duplicate edge, null endpoints, and endpoints outside
-    // `nodes` (5 and 9 bridged only through one — they must not merge).
-    // connectedComponentsStar runs on the graph those cases reduce to:
+  test("connectedComponents: driver path equals the rounds (seeded graphs)") {
+    // Both paths must give one result on inputs the caller contract
+    // leaves open: a null and a duplicated node id, self-loops, a
+    // duplicate edge, null endpoints, and endpoints outside `nodes` (5
+    // and 9 bridged only through one — they must not merge). The
+    // reference runs the rounds on the graph those cases reduce to:
     // distinct non-null ids, edges with both endpoints in the node set.
     import spark.implicits._
     def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
@@ -330,13 +330,12 @@ class ScaleSpec extends SparkSpec {
       val dist = Scale.connectedComponents(nodes, edges, localCap = 0)
       assert(local.isLocal && !dist.isLocal, "the two calls must take different paths")
       val inSet = ids.flatten.toSet
-      val star = Scale.connectedComponentsStar(inSet.toSeq.toDF("id"),
+      val want = rows(Scale.connectedComponents(inSet.toSeq.toDF("id"),
         es.collect { case (Some(a), Some(b)) if inSet(a) && inSet(b) => (a, b) }
-          .toDF("src", "dst"))
-      val want = rows(star)
+          .toDF("src", "dst"), localCap = 0))
       assert(want.map(_._1) === inSet.toSeq.sorted)
-      assert(rows(local) === want, s"driver path vs star: $es")
-      assert(rows(dist) === want, s"rounds vs star: $es")
+      assert(rows(local) === want, s"driver path vs reduced graph: $es")
+      assert(rows(dist) === want, s"rounds vs reduced graph: $es")
     }
     val n = 40
     val ids = (0L until n).map(Option(_)) ++ Seq(None, Some(7L))
@@ -348,6 +347,12 @@ class ScaleSpec extends SparkSpec {
         (None, Some(4L)), (Some(6L), None)))
     }
     check(ids, Seq.empty)
+    // a larger hash-derived graph: 500 nodes, 800 edges
+    val hashEdges = spark.range(800).select(
+        pmod(xxhash64(col("id"), lit(1)), lit(500)).as("src"),
+        pmod(xxhash64(col("id"), lit(2)), lit(500)).as("dst"))
+      .collect().map(r => (Option(r.getLong(0)), Option(r.getLong(1)))).toSeq
+    check((0L until 500L).map(Option(_)), hashEdges)
     // the cap boundary counts mirrored edge rows (two per input edge) and
     // node rows: 3 edges are 6 rows, so 6 stays local and 5 falls back;
     // with 8 node rows a cap of 7 falls back on the node collect alone
@@ -359,31 +364,6 @@ class ScaleSpec extends SparkSpec {
     assert(rows(atCap) === rows(overCap))
     assert(rows(atCap) === Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 4L), (6L, 6L)))
     assert(!Scale.connectedComponents((1L to 8L).toDF("id"), chain, localCap = 7).isLocal)
-  }
-
-  test("connectedComponentsStar equals min-label propagation (seeded random graph)") {
-    val n = 500
-    val nodes = spark.range(n).select(col("id"))
-    // deterministic pseudo-random edge list (hash-derived endpoints)
-    val edges = spark.range(800).select(
-      pmod(xxhash64(col("id"), lit(1)), lit(n)).as("src"),
-      pmod(xxhash64(col("id"), lit(2)), lit(n)).as("dst"))
-      .where(col("src") =!= col("dst"))
-    val a = Scale.connectedComponents(nodes, edges, localCap = 0)
-    val b = Scale.connectedComponentsStar(nodes, edges)
-    assert(a.except(b).count() === 0 && b.except(a).count() === 0)
-  }
-
-  test("connectedComponentsStar: 64-node chain within O(log n) rounds") {
-    // The whole point of the star alternation: a path graph needs ~64
-    // propagation rounds but must finish in ~log2(64)+c star rounds —
-    // maxIter=12 fails loudly if the algorithm degrades to linear.
-    import spark.implicits._
-    val n = 64
-    val nodes = (1L to n.toLong).toDF("id")
-    val edges = (1L until n.toLong).map(i => (i, i + 1)).toDF("src", "dst")
-    val got = Scale.connectedComponentsStar(nodes, edges, maxIter = 12)
-    assert(got.where(col("cluster") === 1L).count() === n.toLong)
   }
 
   test("incrementalComponents equals a full rescan (seeded random graph, delta split)") {
@@ -406,7 +386,7 @@ class ScaleSpec extends SparkSpec {
     val deltaEdges = edges.where(col("src") >= 400 || col("dst") >= 400)
     // sanity: the planted graph really exercises the through-delta case
     assert(deltaEdges.count() > 0 && baseEdges.count() > 0)
-    val full = Scale.connectedComponentsStar(nodes, edges)
+    val full = Scale.connectedComponents(nodes, edges, localCap = 0)
     val inc = Scale.incrementalComponents(nodes, baseNodes, baseEdges, deltaEdges)
     assert(inc.except(full).count() === 0 && full.except(inc).count() === 0,
       "incremental (contract + delta) must equal the full rescan exactly")
@@ -490,7 +470,7 @@ class ScaleSpec extends SparkSpec {
 
   test("incrementalFromLabels resumes from a PLAIN persisted-style label table") {
     // r11: the deployment entry point — the label table arrives as an
-    // ordinary DataFrame (here: base star-CC labels collected and
+    // ordinary DataFrame (here: base CC labels collected and
     // re-parallelized, exactly what a parquet read-back looks like, with
     // no lineage back to the base edges), and the contraction + delta CC
     // must still equal the full rescan. Direct unit coverage of the
@@ -506,10 +486,10 @@ class ScaleSpec extends SparkSpec {
     val baseNodes = nodes.where(col("id") < 400)
     val baseEdges = edges.where(col("src") < 400 && col("dst") < 400)
     val deltaEdges = edges.where(col("src") >= 400 || col("dst") >= 400)
-    val persisted = Scale.connectedComponentsStar(baseNodes, baseEdges)
+    val persisted = Scale.connectedComponents(baseNodes, baseEdges)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       .toDF("id", "cluster")
-    val full = Scale.connectedComponentsStar(nodes, edges)
+    val full = Scale.connectedComponents(nodes, edges, localCap = 0)
     val inc = Scale.incrementalFromLabels(nodes, persisted, deltaEdges)
     assert(inc.except(full).count() === 0 && full.except(inc).count() === 0,
       "persisted-label resume must equal the full rescan exactly")
